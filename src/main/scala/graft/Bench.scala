@@ -1,25 +1,37 @@
 package graft
 
+import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
  * Driver-run benchmark: times every SparkEntry query at the configured SF,
- * plus the flagship end-to-end extraction throughput (docs/sec) on a
- * deterministic synthesized corpus. Emits ONE JSON line.
+ * plus the extraction throughput (docs/sec) of the `extractThroughput`
+ * stand-in on a deterministic synthesized corpus, plus one N-vs-4N scaling
+ * pair. Emits ONE JSON line.
  *
- * Measurement protocol (this host's available CPU fluctuates in multi-minute
- * phases — identical warm jobs vary up to 16x; throttling only ever
- * SUBTRACTS throughput):
- *  - every throughput number is best-of-N warm passes;
- *  - a single-thread host-speed canary (fixed FNV pass over 64 MB) runs
- *    before and after, so the emitted JSON itself shows what the host was
- *    doing during the measurement (canary_sec ~0.04 s on a quiet host);
- *  - scaling evidence (north_rule: >=0.8 efficiency from N to 4N) comes from
- *    forked core-pinned child JVMs in interleaved (8, 32) rounds — both
- *    levels see the same host phase; the best combined round is reported.
+ * Fixed-pass protocol:
+ *  - sweep: every query is timed once; a query that throws is listed under
+ *    `queries_failed` and is neither a timing nor part of `value`;
+ *  - extraction: one warm-up pass, then `TimedPasses` timed passes;
+ *    `extract_docs_per_sec` is their median, and every pass is listed;
+ *  - scaling: the pair `scalingPair` derives from the session's cpus, run
+ *    back to back in forked core-pinned child JVMs on the same corpus; it
+ *    reports raw efficiency (north rule: >= 0.8 from N to 4N) and the
+ *    efficiency per consumed core (docs per process CPU-second, hi over lo).
+ *
+ * Knobs: `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_CPUS`, `SPARK_GRAFT_BENCH_ROWS`
+ * (corpus rows, default 100000) and `SPARK_GRAFT_SCALING` (`0` skips the
+ * pair). The benchmark of record for the shipped `Extract.run` pipeline is
+ * `extractbench/`; this one keeps the driver's `BENCH_*` trajectory.
  */
 object Bench {
+
+  val TimedPasses = 5
+
+  /** The scaling children read at most this many rows: a 1-core child then
+    * still finishes a pass in seconds. */
+  private val ScalingRowsCap = 50000L
 
   def buildSession(cpus: String): SparkSession = {
     // shuffle spill dir: tmpfs when available so the CPU-scaling measurement
@@ -36,124 +48,10 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.local.dir", localDir)
-      // single-host tmpfs shuffle: compression trades CPU for RAM-bandwidth;
-      // which side wins depends on the host (env-tunable, measured A/B)
-      .config("spark.shuffle.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "true"))
-      .config("spark.shuffle.spill.compress",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "true"))
       .getOrCreate()
   }
 
-  /** Parallel host-capacity canary: 32 threads each FNV-hash a disjoint
-    * 2 MB slice of a 64 MB buffer; wall time of the slowest thread. On a
-    * quiet 32-core host this lands around ~0.01 s (memory-bandwidth-bound,
-    * not 1/32 of the single-thread pass);
-    * this VM's throttle phases cap PARALLEL capacity independently of
-    * single-thread speed, so both canaries are needed to interpret a
-    * throughput number. */
-  def hostCanaryParallel(threads: Int = 32): Double = {
-    val buf = new Array[Byte](64 << 20)
-    var x = 0x9E3779B97F4A7C15L
-    var i = 0
-    while (i < buf.length) { x = x * 6364136223846793005L + 1442695040888963407L; buf(i) = (x >>> 56).toByte; i += 1 }
-    val slice = buf.length / threads
-    val sink = new java.util.concurrent.atomic.AtomicLong()
-    def pass(): Double = {
-      val t0 = System.nanoTime()
-      val ts = (0 until threads).map { t =>
-        new Thread(() => {
-          var h = 0xCBF29CE484222325L
-          var j = t * slice
-          val end = j + slice
-          while (j < end) { h ^= buf(j); h *= 0x100000001B3L; j += 1 }
-          sink.addAndGet(h)
-        })
-      }
-      ts.foreach(_.start()); ts.foreach(_.join())
-      (System.nanoTime() - t0) / 1e9
-    }
-    pass()
-    val best = (1 to 3).map(_ => pass()).min
-    if (sink.get == 42L) System.err.println("canary sink")
-    best
-  }
-
-  /** Single-thread host-speed canary: FNV-1a over 64 MB, best of 3.
-    * ~0.04 s when the host is quiet; grows linearly under throttling. */
-  def hostCanary(): Double = {
-    val buf = new Array[Byte](64 << 20)
-    var x = 0x123456789ABCDEFL
-    var i = 0
-    while (i < buf.length) {
-      x = x * 6364136223846793005L + 1442695040888963407L
-      buf(i) = (x >>> 56).toByte
-      i += 1
-    }
-    var sink = 0L
-    def pass(): Double = {
-      val t0 = System.nanoTime()
-      var h = 0xCBF29CE484222325L
-      var j = 0
-      while (j < buf.length) { h ^= buf(j); h *= 0x100000001B3L; j += 1 }
-      sink ^= h
-      (System.nanoTime() - t0) / 1e9
-    }
-    pass()
-    val best = (1 to 3).map(_ => pass()).min
-    if (sink == 42L) System.err.println("canary sink") // defeat DCE
-    best
-  }
-
-  /** Sustained aggregate throughput probe: `threads` threads each FNV-hash
-    * a private 8 MB buffer in a loop for `seconds` of wall-clock; returns
-    * total passes/sec. Rationale: this host's throttle behaves like a
-    * token bucket — SHORT canary bursts run at full speed while a
-    * 60-second pinned child gets squeezed to a sustained aggregate
-    * budget, so instantaneous probes cannot validate capacity for a
-    * scaling round (measured: burst canaries at quiet-ref bracketing a
-    * round whose 32-core child ran at 1/4 speed). Only a sustained probe
-    * reveals the budget the children will actually see. */
-  def hostSustainedRate(threads: Int, seconds: Double = 4.0): Double = {
-    val stopAt = System.nanoTime() + (seconds * 1e9).toLong
-    val counts = new java.util.concurrent.atomic.AtomicLong()
-    val sink = new java.util.concurrent.atomic.AtomicLong()
-    val ts = (0 until threads).map { t =>
-      new Thread(() => {
-        val buf = new Array[Byte](8 << 20)
-        java.util.Arrays.fill(buf, (t + 1).toByte)
-        var h = 0xCBF29CE484222325L
-        var local = 0L
-        while (System.nanoTime() < stopAt) {
-          var i = 0
-          while (i < buf.length) { h ^= buf(i); h *= 0x100000001B3L; i += 1 }
-          local += 1
-        }
-        counts.addAndGet(local)
-        sink.addAndGet(h)
-      })
-    }
-    val t0 = System.nanoTime()
-    ts.foreach(_.start()); ts.foreach(_.join())
-    if (sink.get == 42L) System.err.println("canary sink")
-    counts.get.toDouble / ((System.nanoTime() - t0) / 1e9)
-  }
-
-  /** Sustained probe pair: (effective core count, single-thread rate).
-    * Cores = 32-thread aggregate over single-thread, both held ~4 s
-    * (~32 quiet; the throttle budget otherwise). The single-thread RATE
-    * is returned too: it anchors per-core SPEED across a scaling round —
-    * burst canaries miss sustained-speed collapses that make one child's
-    * window 20x slower per core than the other's (observed). */
-  def sustainedProbe(): (Double, Double) = {
-    val r1 = hostSustainedRate(1)
-    val rN = hostSustainedRate(32)
-    (rN / math.max(r1, 1e-9), r1)
-  }
-
-  def effectiveCores(): Double = sustainedProbe()._1
-
-  /** Cache key for the materialized corpus: rows + a content probe of the
+  /** Cache key for the materialized corpus: rows + a content sample of the
     * generator, so a PageGen change can never silently bench stale data. */
   def corpusKey(rows: Long): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -204,190 +102,111 @@ object Bench {
     (n / sec, n)
   }
 
-  // ------------------------------------------------- scaling round machinery
-  private[graft] val QuietS = 0.06 // 1.5x single-thread quiet-ref 0.04
-
-  final case class Round(lo: Int, hi: Int, dLo: Double, dHi: Double,
-                         cs: Seq[Double], ec: Seq[Double],
-                         uLo: Double, uHi: Double,
-                         sr1: Seq[Double]) {
-    def eff: Double = (dHi / dLo) / (hi.toDouble / lo)
-    // docs per consumed-CPU-second, hi over lo: normalizes away host
-    // starvation (a child that only RECEIVED 65% of its cores is not
-    // evidence about the CODE's scaling) while leaving real parallel
-    // overheads — shuffle, memory bandwidth, lock contention — in.
-    // Reported alongside eff, never instead of it.
-    def effCpu: Double =
-      if (uLo > 0 && uHi > 0) (dHi / uHi) / (dLo / uLo) else -1.0
-    def capacityHeld: Boolean = ec.forall(_ >= hi * 0.8)
-    // ground truth from inside the children: each must have PHYSICALLY
-    // consumed most of its assigned cores (task executorCpuTime/wall).
-    // Host oversubscription can pass every outside probe while lock-
-    // holder preemption starves the wider child — only self-measured
-    // consumption certifies the comparison.
-    def coresConsumed: Boolean = uLo >= lo * 0.6 && uHi >= hi * 0.6
-    // per-core SPEED anchored by sustained single-thread rates taken
-    // before / between / after the children: a sustained-speed phase
-    // flip makes one child's window slower per core than the other's
-    // (observed 20x) without tripping burst canaries or consumption
-    def speedFlat: Boolean =
-      sr1.nonEmpty && sr1.min > 0 && sr1.max / sr1.min <= 1.3
-    // tear detector: when the round is a fair measurement, the two
-    // children's docs-per-consumed-CPU-second agree to well within 3x —
-    // across the 114 archived VALID rounds on this host effCpu sits in
-    // [0.6, 1.2] (re-checked against the archive: this gate rejects none
-    // of them). A mid-round host tear can slip past every other gate
-    // (anchors at the 1.3 boundary, consumption 70%+) while one child
-    // burns its cores on preempted locks/GC making no progress — observed
-    // effCpu 0.03, i.e. 20x below the archive floor. Both sides bounded,
-    // so superlinear tears are rejected symmetrically; the raw eff is
-    // never gated on, only cross-child consistency.
-    def cpuRateConsistent: Boolean = effCpu >= (1.0 / 3) && effCpu <= 3.0
-    def quiet: Boolean = capacityHeld && coresConsumed && speedFlat &&
-      cpuRateConsistent && cs.forall(_ < QuietS)
-    def valid: Boolean = capacityHeld && coresConsumed && speedFlat &&
-      cpuRateConsistent && cs.max <= 0.15 && cs.max / cs.min <= 1.3
-    def json: String =
-      s"""{"pair":[$lo,$hi],"d_lo":${dLo.round},"d_hi":${dHi.round},"eff":${"%.3f".format(eff)},"eff_per_consumed_core":${"%.3f".format(effCpu)},"quiet":$quiet,"valid":$valid,"canary_sec":${cs.map(c => "%.4f".format(c)).mkString("[", ",", "]")},"effective_cores":${ec.map(c => "%.1f".format(c)).mkString("[", ",", "]")},"cpus_used":[${"%.1f".format(uLo)},${"%.1f".format(uHi)}],"sustained_rate_1t":${sr1.map(c => "%.1f".format(c)).mkString("[", ",", "]")}}"""
+  /** One timed extraction pass; `cpuSec` is the whole process's CPU time. */
+  final case class Pass(docsPerSec: Double, rows: Long, cpuSec: Double) {
+    def cpusUsed: Double = cpuSec * docsPerSec / math.max(rows, 1L)
   }
 
-  /** One interleaved pinned (lo, hi) round with the full validity chain:
-    * canaries before/between/after, sustained single-thread rate anchors,
-    * child-self-measured consumption. Shared by the in-bench scaling loop
-    * and the standing ScalingHunt. Returns None when a child failed. */
-  def runScalingRound(lo: Int, hi: Int, rows: Long, hiFirst: Boolean,
-                      ec0: Double, r1Before: Double): Option[Round] = {
-    val c0 = hostCanary()
-    val first = runPinnedChild(if (hiFirst) hi else lo, rows)
-    Thread.sleep(20000)
-    val c1 = hostCanary()
-    val r1Mid = hostSustainedRate(1)
-    val second = runPinnedChild(if (hiFirst) lo else hi, rows)
-    val c2 = hostCanary()
-    val (ec1, r1After) = sustainedProbe()
-    val ((dLo, uLo), (dHi, uHi)) =
-      if (hiFirst) (second, first) else (first, second)
-    if (dLo > 0 && dHi > 0)
-      Some(Round(lo, hi, dLo, dHi, Seq(c0, c1, c2), Seq(ec0, ec1),
-        uLo, uHi, Seq(r1Before, r1Mid, r1After)))
-    else None
-  }
-
-  // ------------------------------------------------- best-e2e record freeze
-  /** Best-achieved flagship-e2e record, frozen across every Bench run on
-    * this machine (builder reruns and driver runs alike). Sound because
-    * host throttling only ever SUBTRACTS throughput: the max docs/sec
-    * across runs is a lower bound on the code's quiet capability, and the
-    * canary brackets captured with it say what the host was doing. Guarded
-    * like ScalingHunt.freeze — exclusive FileLock, re-read under the lock,
-    * temp-write + atomic rename — so concurrent runs only ever improve it. */
-  def freezeE2eRecord(docsPerSec: Double, rows: Long, cpus: String,
-                      canary1: Seq[Double], canary32: Seq[Double]): Unit = {
-    // only the full-size corpus may set the record: docs/sec from a small-SF
-    // rehearsal run is a different (noisier, overhead-dominated) quantity
-    // and must not displace an sf0.1 capture
-    if (rows < 100000) return
-    val dir = Seq("fixtures", "/root/repo/fixtures")
-      .map(new java.io.File(_)).find(_.isDirectory).getOrElse(return)
-    val f = new java.io.File(dir, "bench_record_e2e.json")
-    val lch = java.nio.channels.FileChannel.open(
-      new java.io.File(dir, f.getName + ".lock").toPath,
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE)
-    try {
-      val lk = lch.lock()
-      try {
-        if (readE2eRecord(f).exists(js =>
-            """"docs_per_sec":(\d+)""".r.findFirstMatchIn(js)
-              .exists(_.group(1).toDouble >= docsPerSec))) return
-        val rec = s"""{"captured_at_ms":${System.currentTimeMillis()},"docs_per_sec":${docsPerSec.round},"rows":$rows,"cpus":$cpus,"canary_sec":${canary1.map(c => "%.4f".format(c)).mkString("[", ",", "]")},"canary32_sec":${canary32.map(c => "%.4f".format(c)).mkString("[", ",", "]")},"protocol":"best warm pass of the flagship extraction (parquet scan -> salt repartition -> kernel) at local[$cpus]; throttling only subtracts, so the max across session runs lower-bounds quiet capability; single-thread/32-thread canary brackets (quiet refs 0.04/0.01) record the host phase at capture"}"""
-        val tmp = new java.io.File(dir, f.getName + ".tmp." + ProcessHandle.current().pid())
-        val w = new java.io.FileWriter(tmp)
-        try w.write(rec + "\n") finally w.close()
-        java.nio.file.Files.move(tmp.toPath, f.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      } finally lk.release()
-    } finally lch.close()
-  }
-
-  private def readE2eRecord(f: java.io.File): Option[String] =
-    if (!f.isFile) None
-    else {
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try Some(src.mkString.trim).filter(s => s.startsWith("{") && s.endsWith("}"))
-      finally src.close()
+  /** One untimed warm-up pass (JIT and codegen dominate a cold first pass),
+    * then `TimedPasses` timed ones. */
+  def timedPasses(spark: SparkSession, rows: Long, partitions: Int): Seq[Pass] = {
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    extractThroughput(spark, rows, partitions)
+    Seq.fill(TimedPasses) {
+      val cpu0 = os.getProcessCpuTime
+      val (dps, n) = extractThroughput(spark, rows, partitions)
+      Pass(dps, n, (os.getProcessCpuTime - cpu0) / 1e9)
     }
-
-  /** The frozen best-e2e record for embedding in the bench JSON. */
-  def frozenE2eBest(): String =
-    Seq("fixtures/bench_record_e2e.json", "/root/repo/fixtures/bench_record_e2e.json")
-      .map(new java.io.File(_)).find(_.isFile).flatMap(readE2eRecord)
-      .map(js => s""","builder_e2e_best":$js""").getOrElse("")
-
-  /** Rounds frozen by the builder-side standing hunt (graft.ScalingHunt),
-    * if any were ever captured: "builder_quiet_round" (strict-quiet,
-    * eff >= 0.8) and "builder_sustained_round" (valid, eff >= 0.8 under
-    * flat-but-throttled conditions). Reported in the bench artifact with
-    * their capture provenance — clearly labeled as builder-captured,
-    * never substituted for the live round of record. */
-  def frozenBuilderRounds(): String = {
-    def readOne(base: String): Option[String] =
-      Seq(base, s"/root/repo/$base")
-        .map(new java.io.File(_)).find(_.isFile).map { f =>
-          val src = scala.io.Source.fromFile(f, "UTF-8")
-          try src.mkString.trim finally src.close()
-        }.filter(s => s.startsWith("{") && s.endsWith("}"))
-    val quiet = readOne("fixtures/scaling_record.json")
-      .map(j => s""","builder_quiet_round":$j""").getOrElse("")
-    val sustained = readOne("fixtures/scaling_record_sustained.json")
-      .map(j => s""","builder_sustained_round":$j""").getOrElse("")
-    quiet + sustained
   }
 
-  // ------------------------------------------------- forked pinned children
-  /** Fork one JVM with -XX:ActiveProcessorCount pinned to `cpus`, run the
-    * e2e extraction there, return its best docs/sec. Pinning matters: an
-    * unpinned local[8] silently borrows the other 24 cores for GC/shuffle
-    * threads and inflates the low-parallelism number. */
-  def runPinnedChild(cpus: Int, rows: Long): (Double, Double) = {
+  /** The median pass by docs/sec (the upper one of an even count). */
+  def medianPass(passes: Seq[Pass]): Pass =
+    passes.sortBy(_.docsPerSec).apply(passes.length / 2)
+
+  /** Wall seconds of `body`, or what it threw: a failed run is never a timing. */
+  def timed(body: => Any): Try[Double] = {
+    val t0 = System.nanoTime()
+    try { body; Success((System.nanoTime() - t0) / 1e9) }
+    catch { case e: Throwable => Failure(e) }
+  }
+
+  /** The N-vs-4N pair for a session of `cpus` task threads on a host with
+    * `available` processors: hi = min(cpus, available), lo = hi / 4; None
+    * (no scaling section) when lo < 1. */
+  def scalingPair(cpus: Int, available: Int): Option[(Int, Int)] = {
+    val hi = math.min(cpus, available)
+    if (hi / 4 < 1) None else Some((hi / 4, hi))
+  }
+
+  /** A scaling child's median pass: docs/sec and cores it consumed. */
+  final case class Child(docsPerSec: Double, cpusUsed: Double)
+
+  /** One scaling pair; a child that failed is None and the section says so. */
+  final case class Scaling(lo: Int, hi: Int, rows: Long,
+                           atLo: Option[Child], atHi: Option[Child]) {
+    def json: String = (atLo, atHi) match {
+      case (Some(l), Some(h)) =>
+        val eff = (h.docsPerSec / l.docsPerSec) / (hi.toDouble / lo)
+        val effCpu = (h.docsPerSec / h.cpusUsed) / (l.docsPerSec / l.cpusUsed)
+        s"""{"pair":[$lo,$hi],"docs_per_sec_$lo":${l.docsPerSec.round},"docs_per_sec_$hi":${h.docsPerSec.round},"efficiency":${"%.3f".format(eff)},"efficiency_per_consumed_core":${"%.3f".format(effCpu)},"cpus_used":[${"%.1f".format(l.cpusUsed)},${"%.1f".format(h.cpusUsed)}],"rows":$rows}"""
+      case _ =>
+        val failed = Seq(lo -> atLo, hi -> atHi).collect { case (c, None) => c }
+        s"""{"pair":[$lo,$hi],"rows":$rows,"failed_children":${failed.mkString("[", ",", "]")}}"""
+    }
+  }
+
+  /** The bench's one JSON line. `value` sums the successful query timings
+    * and the extraction time of the median pass. */
+  def jsonLine(sfDir: String, cpus: String, sweep: Seq[(String, Try[Double])],
+               passes: Seq[Pass], scaling: Option[Scaling]): String = {
+    val ok = sweep.collect { case (name, Success(t)) => name -> t }
+    val failed = sweep.collect { case (name, Failure(_)) => "\"" + name + "\"" }
+    val median = medianPass(passes)
+    val e2eSec = median.rows / median.docsPerSec
+    val qs = (ok :+ ("extract_pipeline_e2e" -> e2eSec))
+      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val total = ok.map(_._2).sum + e2eSec
+    val passesJson = passes.map(_.docsPerSec.round).mkString("[", ",", "]")
+    val scalingJson = scaling.fold("")(s => s""","scaling":${s.json}""")
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir","extract_docs_per_sec":${median.docsPerSec},"extract_docs_per_sec_passes":$passesJson,"extract_rows":${median.rows},"cpus":$cpus$scalingJson}"""
+  }
+
+  /** Fork `graft.ScalingBench child` in a JVM with -XX:ActiveProcessorCount
+    * pinned to `cpus` (an unpinned JVM sizes its GC and JIT threads to the
+    * whole host) and parse its result line; None when the child failed. */
+  def runPinnedChild(cpus: Int, rows: Long): Option[Child] = {
     import scala.jdk.CollectionConverters._
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.filterNot(_.startsWith("-XX:ActiveProcessorCount"))
-    val cp = System.getProperty("java.class.path")
-    val cmd = (Seq(System.getProperty("java.home") + "/bin/java") ++ jvmArgs ++
-      Seq(s"-XX:ActiveProcessorCount=$cpus", "-cp", cp,
-        "graft.ScalingBench", "child", cpus.toString, rows.toString)).asJava
-    val pb = new ProcessBuilder(cmd)
-    pb.redirectErrorStream(true)
-    val proc = pb.start()
-    // drain the WHOLE stream before waitFor: stopping at the first
-    // CHILD_RESULT line leaves the child's shutdown logging filling the OS
-    // pipe buffer, deadlocking parent (in waitFor) against child (in write)
+    val cmd = Seq(System.getProperty("java.home") + "/bin/java") ++ jvmArgs ++
+      Seq(s"-XX:ActiveProcessorCount=$cpus", "-cp", System.getProperty("java.class.path"),
+        "graft.ScalingBench", "child", cpus.toString, rows.toString)
+    val proc = new ProcessBuilder(cmd.asJava).redirectErrorStream(true).start()
+    // drain the WHOLE stream before waitFor: stopping at the result line
+    // leaves the child's shutdown logging filling the OS pipe buffer,
+    // deadlocking parent (in waitFor) against child (in write)
     val lines = scala.io.Source.fromInputStream(proc.getInputStream).getLines()
       .map { l => System.err.println(s"[child-$cpus] $l"); l }
       .toList
     proc.waitFor()
-    lines.find(_.startsWith("CHILD_RESULT")) match {
-      case Some(l) =>
-        val parts = l.split(" ")
-        // CHILD_RESULT <cpus> <docsPerSec> <cpusUsed>; tolerate a malformed
-        // consumption field (it gates validity, it must not kill the bench)
-        def num(i: Int): Double =
-          if (parts.length > i) try parts(i).toDouble catch { case _: NumberFormatException => -1.0 }
-          else -1.0
-        (num(2), num(3))
-      case None => (-1.0, -1.0)
+    lines.find(_.startsWith("CHILD_RESULT ")).map(_.split(" ")).flatMap {
+      case Array(_, _, dps, used) => Try(Child(dps.toDouble, used.toDouble)).toOption
+      case _ => None
     }
   }
 
   def main(args: Array[String]): Unit = {
-    // every f"" / .format below feeds machine-parsed JSON or CHILD_RESULT
-    // lines: a comma-decimal default locale would corrupt both
+    // the JSON and CHILD_RESULT lines are machine-parsed: a comma-decimal
+    // default locale would corrupt both
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val canaryBefore = hostCanary()
-    val canaryParBefore = hostCanaryParallel()
+    val benchRows = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROWS", "100000").toLong
+    val pair =
+      if (sys.env.getOrElse("SPARK_GRAFT_SCALING", "1") != "1") None
+      else scalingPair(cpus.toInt, Runtime.getRuntime.availableProcessors)
+    val scalingRows = math.min(benchRows, ScalingRowsCap)
     val spark = buildSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
@@ -395,306 +214,47 @@ object Bench {
     try spark.read.parquet(s"$sfDir/documents.parquet").limit(10).count()
     catch { case _: Throwable => }
 
-    def timeQuery(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
+    val sweep = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val t = timed(fn(spark, sfDir).count())
+      t.failed.foreach(e => System.err.println(s"[bench] $name FAILED: $e"))
+      name -> t
     }
-    val firstSweep = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> timeQuery(name, fn)
-    }
-    // second chance for the slowest timings: a multi-minute host throttle
-    // phase landing on one query makes its single timing an outlier of the
-    // phase, not the plan (a prior round's artifact carried a 7x outlier
-    // on a bounded baseline query) — re-time the worst few and keep the
-    // min, bounded so the sweep stays cheap
-    val retry = firstSweep.filter(_._2 > 2.0).sortBy(-_._2).take(6).map(_._1).toSet
-    val results = firstSweep.map { case (name, t) =>
-      name -> (if (retry(name)) math.min(t, timeQuery(name, SparkEntry.queries(name))) else t)
-    }
-
-    // flagship throughput: warm pass first (JIT + codegen dominate a cold
-    // first run by >10x), then best-of-N (host throttling only subtracts).
-    // N is adaptive: 3 passes minimum, then — while the best is still
-    // below the target this code has repeatedly demonstrated on a quiet
-    // host — keep re-passing within a wall budget, sleeping through
-    // capacity dips a 8-second sustained probe can predict, so a throttle
-    // phase over the first passes cannot fix a bogus-low headline into
-    // the artifact of record the way it did once.
-    val benchRows = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROWS", "100000").toLong
-    materializeCorpus(spark, benchRows / 4)
-    materializeCorpus(spark, benchRows)
-    extractThroughput(spark, benchRows / 4, cpus.toInt * 2) // warmup
-    val e2eTarget = sys.env.getOrElse("SPARK_GRAFT_E2E_TARGET", "30000").toDouble
-    val e2eBudgetSec = sys.env.getOrElse("SPARK_GRAFT_E2E_BUDGET_SEC", "180").toLong
-    // throttle-phase signature: when the warm passes spread by more than 3x
-    // the host is flipping phases under the measurement, and the best pass
-    // so far is a sample of the phases, not the code — the wall budget then
-    // EXTENDS so the loop can keep probing for a good sub-phase instead of
-    // freezing a throttled headline into the artifact of record
-    val e2eBudgetExtSec = sys.env.getOrElse("SPARK_GRAFT_E2E_BUDGET_EXT_SEC", "480").toLong
-    val passesBuf = scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]
-    (1 to 3).foreach(_ => passesBuf += extractThroughput(spark, benchRows, cpus.toInt * 2))
-    val tE2e0 = System.nanoTime()
-    var extraPasses = 0
-    def spread: Double = {
-      val v = passesBuf.map(_._1)
-      v.max / math.max(v.min, 1e-9)
-    }
-    def e2eBudgetNow: Long = if (spread > 3.0) e2eBudgetExtSec else e2eBudgetSec
-    while (passesBuf.map(_._1).max < e2eTarget && extraPasses < 16 &&
-           (System.nanoTime() - tE2e0) / 1e9 < e2eBudgetNow) {
-      val (ec, _) = sustainedProbe()
-      if (ec < 8.0) Thread.sleep(15000)
-      else { passesBuf += extractThroughput(spark, benchRows, cpus.toInt * 2); extraPasses += 1 }
-    }
-    val passes = passesBuf.toSeq
-    val (inlineBest, extracted) = passes.maxBy(_._1)
-
-    // the parent session is done measuring — stop it BEFORE forking the
-    // pinned children so its idle executor/GC threads cannot pollute them
+    val passes = timedPasses(spark, benchRows, cpus.toInt * 2)
+    // children only read the corpus; the parent session stops before they
+    // start so its idle executor and GC threads cannot compete with them
+    if (pair.nonEmpty) materializeCorpus(spark, scalingRows)
     spark.stop()
+    val scaling = pair.map { case (lo, hi) =>
+      Scaling(lo, hi, scalingRows, runPinnedChild(lo, scalingRows), runPinnedChild(hi, scalingRows))
+    }
 
-    // scaling evidence in the artifact of record: interleaved pinned rounds
-    // (skipped with SPARK_GRAFT_SCALING=0, or when the host is so throttled
-    // the inline passes already crawled — no point burning the round budget)
-    val doScaling = sys.env.getOrElse("SPARK_GRAFT_SCALING", "1") == "1"
-    val scalingJson =
-      if (!doScaling) ""
-      else {
-        // smaller children fit inside shorter host phases; tunable because
-        // some nights capacity flips on ~1-minute timescales
-        val rows = sys.env.getOrElse("SPARK_GRAFT_SCALING_ROWS",
-          math.min(benchRows, 50000L).toString).toLong
-        // Interleaved pinned N-vs-4N rounds, bounded by ROUND COUNT (not
-        // wall-clock alone — round 2's artifact was starved down to a single
-        // throttled round). The north rule asks for >= 0.8 efficiency from
-        // N to 4N parallelism; the PAIR is chosen per round from the host's
-        // measured SUSTAINED capacity, because this VM's throttle behaves
-        // like a token bucket: burst canaries read quiet while a 60-second
-        // child is squeezed to an aggregate budget (measured: burst probes
-        // at quiet-ref bracketing a 32-core child running at 1/4 speed —
-        // the reason a bracketing-probe-only "stable" verdict was removed).
-        // A sustained budget of >= ~26 full-speed cores admits an (8, 32)
-        // round; >= ~7 admits (2, 8) — the same N-vs-4N criterion at a
-        // scale the host can actually express. Below that the loop waits.
-        // A round is valid ("ok" when single-thread probes are also at
-        // quiet-ref, "ok_sustained" when they are merely FLAT — uniform
-        // per-core slowdown cancels in the ratio) only if sustained
-        // capacity held: measured >= 0.8 * hi-level both before AND after
-        // the pair. Anything else is "inconclusive" and says so.
-        // round cap sized ABOVE what the wall budget can fit ((1,4) rounds
-        // run ~100-150 s): the budget is the binding bound, so the loop
-        // keeps hunting past valid-but-<0.8 rounds for the full window —
-        // archive odds say each valid round has ~17% chance of raw >= 0.8,
-        // so more valid rounds per window is the whole game
-        val maxRounds = sys.env.getOrElse("SPARK_GRAFT_SCALING_ROUNDS", "12").toInt
-        val budgetSec = sys.env.getOrElse("SPARK_GRAFT_SCALING_BUDGET_SEC", "720").toLong
-        val tStart = System.nanoTime()
-        def elapsedSec: Long = (System.nanoTime() - tStart) / 1000000000L
-        val rounds = scala.collection.mutable.ArrayBuffer.empty[Round]
-        var r = 0
-        var done = false
-        while (!done && (r < 2 || (r < maxRounds && elapsedSec < budgetSec))) {
-          // sustained-capacity gate + pair selection: don't spend ~2 min of
-          // children inside a capacity dip a 10-second probe can predict.
-          // Gating stops at 2/3 budget so the mandatory rounds always run.
-          var (ec0, r1Before) = sustainedProbe()
-          var g = 0
-          while (g < 8 && elapsedSec < budgetSec * 2 / 3 && ec0 < 3.5) {
-            System.err.println(f"[scaling pre-gate] sustained capacity ${ec0}%.1f cores, waiting (probe $g)")
-            Thread.sleep(15000)
-            val p = sustainedProbe(); ec0 = p._1; r1Before = p._2
-            g += 1
-          }
-          // the sustained probe measures COMPUTE capacity, but children can
-          // still be starved below it by lock-holder preemption (their
-          // self-measured consumption decides validity).
-          // Pair policy, informed by the standing hunt's archive on this
-          // host (355 rounds): (8,32) passed the consumption gate 0/141
-          // times — lock-holder preemption caps pinned multi-thread JVMs
-          // at ~5-11 consumed cores regardless of the probe's reading — so
-          // it gets at most ONE attempt per run and only on a very strong
-          // probe; (1,4) was valid 108/161 (67%) and is where every >=0.8
-          // capture lives. After ANY invalid round — starvation OR a
-          // flatness/capacity failure while children consume 60%+ but
-          // crawl — drop straight to (1,4): it is both the cheapest round
-          // and the likeliest to validate, so the rest of the budget goes
-          // where validity is reachable (wide rounds burned the whole
-          // 600 s in the r4/r5 artifacts without ever validating).
-          val anyInvalid = rounds.exists(!_.valid)
-          val (lo, hi) =
-            if (anyInvalid) (1, 4)
-            else if (ec0 >= 30.0 && !rounds.exists(_.hi == 32)) (8, 32)
-            else if (ec0 >= 7.0) (2, 8)
-            else (1, 4)
-          // single-thread canary before / between / after the two children:
-          // a per-core speed flip BETWEEN the children invalidates the ratio.
-          // Children alternate order across rounds with an idle cooldown
-          // between them: under a token-bucket budget the first child drains
-          // the bucket and the second pays, biasing the ratio in whichever
-          // direction the fixed order picks — alternation + cooldown makes
-          // the bias visible across rounds instead of systematic.
-          val hiFirst = r % 2 == 1
-          runScalingRound(lo, hi, rows, hiFirst, ec0, r1Before).foreach { round =>
-            rounds += round
-            System.err.println(f"[scaling round $r] pair=($lo,$hi) dLo=${round.dLo.round} dHi=${round.dHi.round} eff=${round.eff}%.3f effCpu=${round.effCpu}%.3f quiet=${round.quiet} valid=${round.valid} cs=${round.cs.map(c => f"$c%.3f").mkString(",")} cores=${round.ec.map(c => f"$c%.1f").mkString(",")} used=${round.uLo}%.1f,${round.uHi}%.1f sr1=${round.sr1.map(c => f"$c%.1f").mkString(",")}")
-            // any VALID round meeting the north rule's 0.8 bar ends the
-            // loop (strict-quiet included) — the round of record is the
-            // best-eff valid round, so stopping at success spends no
-            // budget diluting it. Valid-but-below-0.8 rounds do NOT stop
-            // it (they used to, at three): the record is the max over
-            // valid rounds, so every further attempt can only improve the
-            // headline, and a valid-round-granting phase is exactly when
-            // another attempt is most likely to clear the bar
-            if (round.valid && round.eff >= 0.8) done = true
-          }
-          r += 1
-        }
-        if (rounds.isEmpty) ""
-        else {
-          // round of record: strict-quiet ("ok") > valid-sustained
-          // ("ok_sustained", best-eff among valid) > best-dHi
-          // ("inconclusive" — the number then describes the throttle).
-          val record = rounds.find(_.quiet)
-            .orElse(if (rounds.exists(_.valid)) Some(rounds.filter(_.valid).maxBy(_.eff)) else None)
-            .getOrElse(rounds.maxBy(_.dHi))
-          val evidence =
-            if (record.quiet) "ok"
-            else if (record.valid) "ok_sustained"
-            else "inconclusive"
-          val roundsJson = rounds.map(_.json).mkString("[", ",", "]")
-          val frozen = frozenBuilderRounds()
-          s""","scaling":{"pair":[${record.lo},${record.hi}],"docs_per_sec_${record.lo}":${record.dLo.round},"docs_per_sec_${record.hi}":${record.dHi.round},"efficiency":${"%.3f".format(record.eff)},"efficiency_per_consumed_core":${"%.3f".format(record.effCpu)},"cpus_used":[${"%.1f".format(record.uLo)},${"%.1f".format(record.uHi)}],"rows":$rows,"scaling_evidence":"$evidence","host_throttled":${!record.quiet},"round_of_record":${rounds.indexOf(record)},"rounds":$roundsJson$frozen}"""
-        }
-      }
-
-    // the e2e headline may come from the pinned 32-core child when that ran
-    val pinned32 = if (scalingJson.contains(""""pair":[8,32]""")) {
-      val m = """"docs_per_sec_32":(\d+)""".r.findFirstMatchIn(scalingJson).map(_.group(1).toDouble)
-      m.getOrElse(0.0)
-    } else 0.0
-    val docsPerSec = math.max(inlineBest, pinned32)
-
-    // if the live scaling section did not run (or produced nothing), the
-    // builder-captured quiet round still belongs in the artifact
-    val frozenTopLevel = if (scalingJson.isEmpty) frozenBuilderRounds() else ""
-
-    val canaryAfter = hostCanary()
-    val canaryParAfter = hostCanaryParallel()
-    // freeze (and then embed) the best-achieved e2e record — a throttled
-    // run's artifact still carries the machine's demonstrated capability
-    // with capture provenance, clearly labeled builder-frozen
-    freezeE2eRecord(docsPerSec, benchRows, cpus,
-      Seq(canaryBefore, canaryAfter), Seq(canaryParBefore, canaryParAfter))
-    val e2eBest = frozenE2eBest()
-    val qs = (results :+ ("extract_pipeline_e2e" ->
-      (extracted / inlineBest))).map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum + extracted / inlineBest
-    val passesJson = passes.map(p => p._1.round).mkString("[", ",", "]")
-    val jsonLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","extract_docs_per_sec":$docsPerSec,"extract_docs_per_sec_passes":$passesJson,"extract_rows":$extracted,"cpus":$cpus,"canary_sec_before":${"%.4f".format(canaryBefore)},"canary_sec_after":${"%.4f".format(canaryAfter)},"canary_quiet_ref":0.04,"canary32_sec_before":${"%.4f".format(canaryParBefore)},"canary32_sec_after":${"%.4f".format(canaryParAfter)},"canary32_quiet_ref":0.01$e2eBest$scalingJson$frozenTopLevel}"""
-    println(jsonLine)
-    // the stdout capture of a long run can truncate mid-JSON (observed in
-    // a prior round's artifact of record); a file copy under the repo
+    val line = jsonLine(sfDir, cpus, sweep, passes, scaling)
+    println(line)
+    // the stdout capture of a long run can truncate mid-JSON; a file copy
     // keeps the record self-contained
     try {
       val w = new java.io.FileWriter("BENCH_LOCAL.json")
-      try w.write(jsonLine + "\n") finally w.close()
+      try w.write(line + "\n") finally w.close()
     } catch { case _: Throwable => }
   }
 }
 
-/**
- * Two-parallelism scaling evidence (BASELINE.json north_rule: >= 0.8
- * efficiency from N to 4N executors; sandbox substitute per driver
- * instruction: local[8] vs local[32] on the same input).
- *
- * Usage: runMain graft.ScalingBench [rows]  — prints one JSON line and the
- * markdown table row for BASELINE.md.
- */
+/** Scaling child: `runMain graft.ScalingBench child <cpus> <rows>`, forked
+  * by `Bench.runPinnedChild`. Runs the fixed-pass extraction at `cpus` task
+  * threads and prints `CHILD_RESULT <cpus> <docs/sec> <cores consumed>` for
+  * the median pass. */
 object ScalingBench {
-
-  /** Child entry: measure docs/sec at one parallelism level in THIS jvm.
-    * Also reports the CPU the timed passes PHYSICALLY consumed
-    * (sum of task executorCpuTime over wall-clock): the parent cannot
-    * infer from outside whether a pinned child really received its cores
-    * — host oversubscription lets pure-compute probes read full capacity
-    * while a lock/GC-bearing Spark workload collapses (lock-holder
-    * preemption), so the child measures itself and the parent gates
-    * round validity on this ground truth. */
-  private def child(cpus: Int, rows: Long): Unit = {
-    val spark = Bench.buildSession(cpus.toString)
-    spark.sparkContext.setLogLevel("ERROR")
-    Bench.extractThroughput(spark, rows / 4, cpus * 2) // JIT/codegen warmup
-    // consumption is measured over the TASK window (first launch -> last
-    // finish) per pass, not the full wall: driver planning outside the
-    // window would dilute the ratio on fast passes
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong()
-    val minLaunch = new java.util.concurrent.atomic.AtomicLong(Long.MaxValue)
-    val maxFinish = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        if (te.taskMetrics != null) cpuNs.addAndGet(te.taskMetrics.executorCpuTime)
-        if (te.taskInfo != null) {
-          minLaunch.getAndUpdate(m => math.min(m, te.taskInfo.launchTime))
-          maxFinish.getAndUpdate(m => math.max(m, te.taskInfo.finishTime))
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val passes = (1 to 2).map { _ =>
-      cpuNs.set(0); minLaunch.set(Long.MaxValue); maxFinish.set(Long.MinValue)
-      val dps = Bench.extractThroughput(spark, rows, cpus * 2)._1
-      // listener events post asynchronously (the bus drain API is
-      // private[spark]); events for finished tasks land within millis
-      Thread.sleep(700)
-      val windowMs = maxFinish.get - minLaunch.get
-      val used = if (windowMs > 0) cpuNs.get.toDouble / (windowMs * 1e6) else -1.0
-      (dps, used)
-    }
-    spark.stop()
-    val (bestDps, bestUsed) = passes.maxBy(_._1)
-    println(f"CHILD_RESULT $cpus $bestDps $bestUsed%.2f")
-  }
-
-  /** Orchestrator: fork one JVM per parallelism level with
-    * -XX:ActiveProcessorCount pinned (see Bench.runPinnedChild). */
-  def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT) // CHILD_RESULT/JSON are machine-parsed
-    if (args.length >= 3 && args(0) == "child") { child(args(1).toInt, args(2).toLong); return }
-    if (args.nonEmpty && args(0) == "canary") {
-      // host-phase probe for scripted monitoring: single-thread and
-      // 32-thread BURST canary seconds (quiet refs ~0.04 / ~0.01) plus the
-      // SUSTAINED effective core count (~32 quiet; the token-bucket budget
-      // otherwise — the number that decides scaling-pair admissibility)
-      println(f"CANARY ${Bench.hostCanary()}%.4f ${Bench.hostCanaryParallel()}%.4f cores=${Bench.effectiveCores()}%.1f")
-      return
-    }
-    val rows = if (args.nonEmpty) args(0).toLong else 400000L
-
-    // materialize the corpus once in the parent so children only read
-    val prep = Bench.buildSession("16")
-    prep.sparkContext.setLogLevel("ERROR")
-    Bench.materializeCorpus(prep, rows / 4)
-    Bench.materializeCorpus(prep, rows)
-    prep.stop()
-
-    // The sandbox host's available CPU fluctuates over minutes (shared VM);
-    // a single 8-vs-32 comparison can straddle a throttle phase and produce
-    // nonsense in either direction. Run ROUNDS of adjacent (8, 32) children
-    // so both levels see the same host phase, compute the per-round ratio,
-    // and report the round with the highest combined throughput (the least
-    // throttled — throttling only ever subtracts).
-    val rounds = (1 to 3).map { r =>
-      val (t8, _) = Bench.runPinnedChild(8, rows)
-      val (t32, _) = Bench.runPinnedChild(32, rows)
-      System.err.println(s"[round $r] 8=$t8 32=$t32 eff=${(t32 / t8) / 4.0}")
-      (t8, t32)
-    }
-    val (t8, t32) = rounds.maxBy { case (a, b) => a + b }
-    val efficiency = (t32 / t8) / 4.0
-    val roundsJson = rounds.map { case (a, b) => s"""{"d8":$a,"d32":$b}""" }.mkString("[", ",", "]")
-    println(s"""{"metric":"scaling_efficiency","value":$efficiency,"unit":"ratio","docs_per_sec_8":$t8,"docs_per_sec_32":$t32,"rows":$rows,"rounds":$roundsJson}""")
+  def main(args: Array[String]): Unit = args match {
+    case Array("child", cpusArg, rowsArg) =>
+      java.util.Locale.setDefault(java.util.Locale.ROOT) // CHILD_RESULT is machine-parsed
+      val cpus = cpusArg.toInt
+      val spark = Bench.buildSession(cpusArg)
+      spark.sparkContext.setLogLevel("ERROR")
+      val p = Bench.medianPass(Bench.timedPasses(spark, rowsArg.toLong, cpus * 2))
+      spark.stop()
+      println(f"CHILD_RESULT $cpus ${p.docsPerSec} ${p.cpusUsed}%.2f")
+    case _ =>
+      System.err.println("usage: graft.ScalingBench child <cpus> <rows>")
+      sys.exit(2)
   }
 }

@@ -3,16 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /**
- * Round-7 optimization harness (Bench.scala is FROZEN for measurement; this
- * separate main exists per guide §1: isolate and re-time queries without
- * touching the driver contract).
+ * Query-level harness: isolate and re-time queries, or dump their plans,
+ * without running the whole bench.
  *
  * Modes:
  *   runMain graft.BenchExtra plans <outDir> <suffix> [queryCsv]
  *     — write .explain("formatted") for each query to <outDir>/<name>_<suffix>.txt
  *   runMain graft.BenchExtra time <reps> [queryCsv]
  *     — time each query `reps` times with the exact Bench methodology
- *       (fn(spark, sfDir).count()), print min/median per query as JSON.
+ *       (fn(spark, sfDir).count()), print min/median per query as JSON;
+ *       a run that throws prints ERR and is left out of min and median
+ *       (a query with no successful run is "ERR" and not in total_min).
  *   runMain graft.BenchExtra noop <reps> [queryCsv]
  *     — same but with the noop sink (guide §1.4: computes EVERY column),
  *       for isolating compute that .count() would let the optimizer prune.
@@ -56,28 +57,6 @@ object BenchExtra {
           }
         }
 
-      case "ab" =>
-        // interleaved same-JVM A/B of the graft.fan toggle: variants
-        // alternate rep by rep so both see the same host phase
-        val reps = if (args.length > 1) args(1).toInt else 4
-        try spark.read.parquet(s"$sfDir/documents.parquet").limit(10).count()
-        catch { case _: Throwable => }
-        selected(2).foreach { case (name, fn) =>
-          val a = scala.collection.mutable.ArrayBuffer.empty[Double]
-          val b = scala.collection.mutable.ArrayBuffer.empty[Double]
-          for (r <- 1 to reps * 2) {
-            val fan = r % 2 == 1
-            System.setProperty("graft.fan", if (fan) "1" else "0")
-            val t0 = System.nanoTime()
-            try fn(spark, sfDir).count()
-            catch { case e: Throwable => System.err.println(s"[$name] ERR $e") }
-            val t = (System.nanoTime() - t0) / 1e9
-            (if (fan) a else b) += t
-          }
-          System.err.println(f"[ab] $name%-22s fan=${a.min}%7.3f nofan=${b.min}%7.3f  (fan ${a.map(t => f"$t%.2f").mkString(",")} | nofan ${b.map(t => f"$t%.2f").mkString(",")})")
-        }
-        System.setProperty("graft.fan", "1")
-
       case "time" | "noop" =>
         val reps = if (args.length > 1) args(1).toInt else 3
         // warmup (same as Bench)
@@ -85,23 +64,27 @@ object BenchExtra {
         catch { case _: Throwable => }
         val results = selected(2).map { case (name, fn) =>
           spark.sparkContext.setJobDescription(name)
-          val times = (1 to reps).map { _ =>
-            val t0 = System.nanoTime()
-            try {
+          val runs = (1 to reps).map { _ =>
+            Bench.timed {
               if (mode == "noop")
                 fn(spark, sfDir).write.format("noop").mode("overwrite").save()
               else fn(spark, sfDir).count()
-            } catch { case e: Throwable => System.err.println(s"[$name] ERR $e") }
-            (System.nanoTime() - t0) / 1e9
-          }.sorted
-          val mn = times.head
-          val md = times(times.length / 2)
-          System.err.println(f"[$mode] $name%-24s min=$mn%7.3f med=$md%7.3f (${times.map(t => f"$t%.2f").mkString(",")})")
-          (name, mn, md)
+            }
+          }
+          runs.foreach(_.failed.foreach(e => System.err.println(s"[$name] ERR $e")))
+          // failed runs are never timings: min and median cover the rest
+          val times = runs.flatMap(_.toOption).sorted
+          val shown = runs.map(_.fold(_ => "ERR", t => f"$t%.2f")).mkString(",")
+          val stats = times.headOption.map(mn => (mn, times(times.length / 2)))
+          val summary = stats.fold("ERR") { case (mn, md) => f"min=$mn%7.3f med=$md%7.3f" }
+          System.err.println(f"[$mode] $name%-24s $summary ($shown)")
+          (name, stats)
         }
-        val total = results.map(_._2).sum
-        val js = results.map { case (n, mn, md) =>
-          s""""$n":{"min":${"%.3f".format(mn)},"med":${"%.3f".format(md)}}"""
+        val total = results.flatMap(_._2).map(_._1).sum
+        val js = results.map {
+          case (n, Some((mn, md))) =>
+            s""""$n":{"min":${"%.3f".format(mn)},"med":${"%.3f".format(md)}}"""
+          case (n, None) => s""""$n":"ERR""""
         }.mkString("{", ",", "}")
         println(s"""{"mode":"$mode","reps":${reps},"total_min":${"%.3f".format(total)},"queries":$js}""")
     }

@@ -36,14 +36,7 @@ object SparkEntry {
     * keyed exchange downstream. */
   private def tblFan(s: SparkSession, dir: String, name: String): DataFrame = {
     val df = tbl(s, dir, name)
-    if (sys.props.getOrElse("graft.fan", "1") != "1") return df // A/B toggle
-    val f = new java.io.File(s"$dir/$name.parquet")
-    val bytes =
-      if (f.isFile) f.length()
-      else if (f.isDirectory)
-        f.listFiles().filter(x => x.isFile && !x.getName.startsWith("_"))
-          .map(_.length()).sum
-      else -1L
+    val bytes = scanBytes(new java.io.File(s"$dir/$name.parquet"))
     if (bytes < 0) df // unknown layout: leave the scan alone
     else {
       val maxPB = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
@@ -53,6 +46,16 @@ object SparkEntry {
       if (splits * 2 <= target) df.repartition(target) else df
     }
   }
+
+  /** Data bytes of a parquet file or directory (files named `_*` are
+    * metadata), or -1 when the layout is unknown: a missing path, or a
+    * directory whose listing fails (`listFiles` returns null). */
+  private[graft] def scanBytes(f: java.io.File): Long =
+    if (f.isFile) f.length()
+    else if (f.isDirectory)
+      Option(f.listFiles()).fold(-1L)(
+        _.filter(x => x.isFile && !x.getName.startsWith("_")).map(_.length()).sum)
+    else -1L
 
   /** Deterministic doc-derived WARC fixture corpus, written ONCE per
     * (content tag, flavor) by a PARTITIONED job — one task per output

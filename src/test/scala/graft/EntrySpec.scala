@@ -112,4 +112,18 @@ class EntrySpec extends AnyFunSuite {
     val recall = lsh.intersect(brute).size.toDouble / brute.size
     assert(recall >= 0.04, s"LSH recall degenerate: $recall")
   }
+
+  test("scanBytes counts data files, and a failed listing is an unknown layout") {
+    val dir = java.nio.file.Files.createTempDirectory("scan-bytes")
+    java.nio.file.Files.write(dir.resolve("part-0.parquet"), new Array[Byte](10))
+    java.nio.file.Files.write(dir.resolve("_SUCCESS"), new Array[Byte](3))
+    assert(SparkEntry.scanBytes(dir.toFile) === 10L)
+    assert(SparkEntry.scanBytes(dir.resolve("missing.parquet").toFile) === -1L)
+    val unlistable = new java.io.File(dir.toFile, "unlistable") {
+      override def isFile: Boolean = false
+      override def isDirectory: Boolean = true
+      override def listFiles(): Array[java.io.File] = null
+    }
+    assert(SparkEntry.scanBytes(unlistable) === -1L)
+  }
 }
