@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 import graft.functions._
-import org.apache.spark.sql.{graftbridge => bridge}
 
 /**
  * One registry of every graft Catalyst expression, with two front doors:
@@ -83,19 +82,8 @@ object GraftFunctions {
       MinHashBandHash(es.head, es(1), intLit(es(2), "minhash_band_hash"))
     },
     "vec_dot" -> { es => need(es, Set(2), "vec_dot"); VecDot(es.head, es(1)) },
-    // composed from codegen built-ins (no custom expression class): the
-    // builder hands the analyzer the same unresolved tree the Column API
-    // composes, via the Column<->Expression bridge
-    "canonicalize_url" -> { es =>
-      need(es, Set(1), "canonicalize_url")
-      bridge.ColumnBridge.eagerExpression(
-        UrlFunctions.canonicalizeUrl(bridge.ColumnBridge.column(es.head)))
-    },
-    "url_key" -> { es =>
-      need(es, Set(1), "url_key")
-      bridge.ColumnBridge.eagerExpression(
-        UrlFunctions.urlKey(bridge.ColumnBridge.column(es.head)))
-    }
+    "canonicalize_url" -> { es => need(es, Set(1), "canonicalize_url"); CanonicalizeUrl(es.head) },
+    "url_key" -> { es => need(es, Set(1), "url_key"); UrlFunctions.urlKeyExpr(es.head) }
   )
 
   /** Imperative registration into a live session. */

@@ -284,8 +284,9 @@ object SparkEntry {
     // ----- URL canonicalization (crawl dedup/join keys): messy urls are
     //       derived from doc_id arithmetic (mixed-case scheme/host,
     //       default/odd ports, unsorted params, empty queries, fragments)
-    //       and canonicalized by the codegen rule set; the oracle mirrors
-    //       both the derivation and every rule function-for-function. -----
+    //       and canonicalized by the native rule set (UrlFunctions); the
+    //       oracle mirrors the derivation and, as the external mirror of
+    //       the rules, re-derives each with DuckDB built-ins. -----
     "q_url_canon" -> ((s, dir) => {
       val d = col("doc_id")
       val ds = d.cast("string")
@@ -561,7 +562,8 @@ object SparkEntry {
       val edges = docs.select(
         synthHost(col("doc_id")).as("src"),
         synthHost(col("doc_id") * 17 + 3).as("dst"))
-      graft.operators.LinkGraph.pageRank(edges).orderBy("node")
+      // materialized inside, so the iteration caches are released on return
+      graft.operators.LinkGraph.withPageRank(edges)(_.orderBy("node").localCheckpoint())
     }),
     // ----- C4-style corpus line dedup WITH reconstruction: the tiny
     //       vocabulary makes 8-word derived lines repeat corpus-wide;
@@ -834,19 +836,23 @@ object SparkEntry {
         // the gated kernel output is consumed TWICE in one query execution
         // (the pair-generation collect and the final keeper rollup); persist
         // so the HTML kernel + gate + scrub run once per invocation instead
-        // of once per consumer (guide §5: reuse + expensive recompute). The
-        // cache is scoped to this query's lineage — nothing survives across
-        // bench runs (ContextCleaner frees it when the plan is dropped).
+        // of once per consumer (guide §5: reuse + expensive recompute). Both
+        // consumers run before the query returns (the rollup is materialized
+        // by localCheckpoint), so the cache is released right here and no
+        // later query — or a re-timing of this one — can hit it.
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val pairs = graft.operators.Dedup
-        .nearDupPairs(gated, "doc_id", "clean_text", threshold = 0.6).toDF()
-      val kept = graft.operators.Dedup.collapseNearDups(gated, pairs, "doc_id")
-      kept.select(synthHost(col("doc_id")).as("host"),
-          length(col("clean_text")).as("n_chars"))
-        .groupBy("host")
-        .agg(count(lit(1)).cast("long").as("n_docs"),
-          sum(col("n_chars")).cast("long").as("sum_chars"))
-        .orderBy("host")
+      try {
+        val pairs = graft.operators.Dedup
+          .nearDupPairs(gated, "doc_id", "clean_text", threshold = 0.6).toDF()
+        val kept = graft.operators.Dedup.collapseNearDups(gated, pairs, "doc_id")
+        kept.select(synthHost(col("doc_id")).as("host"),
+            length(col("clean_text")).as("n_chars"))
+          .groupBy("host")
+          .agg(count(lit(1)).cast("long").as("n_docs"),
+            sum(col("n_chars")).cast("long").as("sum_chars"))
+          .orderBy("host")
+          .localCheckpoint()
+      } finally gated.unpersist()
     }),
     // ----- SimHash near-dup detection (hamming-blocked self-join) -----
     "q_simhash_pairs" -> ((s, dir) => {
@@ -1205,9 +1211,9 @@ object SparkEntry {
     // the bloom-pruned variant must be row-identical to a plain anti-join
     "q_resume_bloom" ->
       "SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM documents WHERE doc_id % 7 < 2) ORDER BY doc_id",
-    // url derivation + every canonicalization rule mirrored function-for-
-    // function (regexp_extract groups, first-match regexp_replace,
-    // split/sort/join over '&', CASE order identical)
+    // url derivation + every canonicalization rule of UrlFunctions, mirrored
+    // with DuckDB built-ins (regexp_extract groups, first-match
+    // regexp_replace, split/sort/join over '&', CASE order identical)
     "q_url_canon" ->
       ("""WITH u AS (SELECT doc_id, """ +
       """(CASE doc_id % 3 WHEN 0 THEN 'http' WHEN 1 THEN 'HTTPS' ELSE 'HtTp' END) || '://' || """ +

@@ -37,74 +37,81 @@ import org.apache.spark.sql.functions._
 object LinkGraph {
 
   /**
-   * Fixed-point PageRank over an edge list. Input: one row per directed
-   * edge (duplicate edges are collapsed). Output: one row per node —
+   * Fixed-point PageRank over an `(src, dst)` edge list, evaluated by
+   * `consume`. Input: one row per directed edge (duplicate edges are
+   * collapsed). `consume` sees one row per node —
    * (node, outdeg, indeg, rank_fp) with rank_fp the scaled-integer rank
-   * after `iters` iterations from the uniform start scale/N.
+   * (scale 1e12) after `iters` iterations from the uniform start scale/N.
    *
    * rank'(v) = (15 * (scale div N)) div 100
    *          + (85 * sum_{u->v}(rank(u) div outdeg(u))) div 100
+   *
+   * The node set and the outdeg-joined edge list are persisted: EVERY
+   * iteration plus the final degree assembly reads both, and without the
+   * cache each of those ~iters+2 consumers re-executes the edge scan +
+   * distinct lineage (guide §5: reused AND expensive to recompute = the
+   * case for caching). Integer arithmetic is order-independent, so caching
+   * cannot change any value. Both caches are released when `consume`
+   * returns or throws, so `consume` must run every action that needs them.
    */
-  def pageRank(edges: DataFrame, srcCol: String = "src",
-               dstCol: String = "dst", iters: Int = 5,
-               scale: Long = 1000000000000L,
-               checkpointEvery: Int = 10): DataFrame = {
+  def withPageRank[T](edges: DataFrame, iters: Int = 5)(consume: DataFrame => T): T = {
+    val scale = 1000000000000L
+    val checkpointEvery = 10
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(checkpointEvery >= 1, s"checkpointEvery must be >= 1, got $checkpointEvery")
     // null endpoints carry no link semantics and would silently drop at
     // the equi-joins anyway — exclude them from the node universe too
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e = edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
-    // nodes and the outdeg-joined edge list are consumed by EVERY iteration
-    // plus the final degree assembly; without persist each of the ~iters+2
-    // consumers re-executes the edge scan + distinct lineage (guide §5:
-    // reused AND expensive to recompute = the case for caching). Integer
-    // arithmetic is order-independent, so caching cannot change any value.
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val outdeg = e.groupBy(col("src"))
       .agg(count(lit(1)).cast("long").as("outdeg"))
     val indeg = e.groupBy(col("dst"))
       .agg(count(lit(1)).cast("long").as("indeg"))
       .withColumnRenamed("dst", "node")
-    // the one driver-side read: node count (a single long); also
-    // materializes the nodes cache for the iterations below
-    val n = nodes.count()
-    require(n > 0, "pageRank needs at least one node")
-    val r0 = scale / n
-    val base = (15L * r0) / 100L
-
+    val nodes = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct()
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val eo = e.join(outdeg, Seq("src")) // (src, dst, outdeg)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var ranks = nodes.withColumn("r", lit(r0))
-    for (i <- 1 to iters) {
-      val contrib = eo
-        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"), expr("r div outdeg").as("c"))
-        .groupBy(col("node"))
-        .agg(sum(col("c")).cast("long").as("s"))
-      ranks = nodes.join(contrib, Seq("node"), "left")
+    try {
+      // the one driver-side read: node count (a single long); also
+      // materializes the nodes cache for the iterations below
+      val n = nodes.count()
+      require(n > 0, "pageRank needs at least one node")
+      val r0 = scale / n
+      val base = (15L * r0) / 100L
+
+      var ranks = nodes.withColumn("r", lit(r0))
+      for (i <- 1 to iters) {
+        val contrib = eo
+          .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
+          .select(col("dst").as("node"), expr("r div outdeg").as("c"))
+          .groupBy(col("node"))
+          .agg(sum(col("c")).cast("long").as("s"))
+        ranks = nodes.join(contrib, Seq("node"), "left")
+          .select(col("node"),
+            (lit(base) +
+              expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100"))
+              .cast("long").as("r"))
+        // high-iteration hygiene: the unrolled lineage grows superlinearly in
+        // the analyzer and a task retry would recompute every prior iteration;
+        // truncate it every `checkpointEvery` rounds. Values are untouched —
+        // localCheckpoint materializes exactly the rows the plan defines — so
+        // the result is bit-identical to the unrolled form.
+        // Never triggers at the shipped iters=5 default.
+        if (i % checkpointEvery == 0 && i < iters) ranks = ranks.localCheckpoint()
+      }
+      consume(nodes
+        .join(outdeg.withColumnRenamed("src", "node"), Seq("node"), "left")
+        .join(indeg, Seq("node"), "left")
+        .join(ranks, Seq("node"))
         .select(col("node"),
-          (lit(base) +
-            expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100"))
-            .cast("long").as("r"))
-      // high-iteration hygiene: the unrolled lineage grows superlinearly in
-      // the analyzer and a task retry would recompute every prior iteration;
-      // truncate it every `checkpointEvery` rounds. Values are untouched —
-      // localCheckpoint materializes exactly the rows the plan defines — so
-      // the result is bit-identical to the unrolled form (spec-pinned).
-      // Never triggers at the shipped iters=5 default.
-      if (i % checkpointEvery == 0 && i < iters) ranks = ranks.localCheckpoint()
+          coalesce(col("outdeg"), lit(0L)).as("outdeg"),
+          coalesce(col("indeg"), lit(0L)).as("indeg"),
+          col("r").as("rank_fp")))
+    } finally {
+      nodes.unpersist()
+      eo.unpersist()
     }
-    nodes
-      .join(outdeg.withColumnRenamed("src", "node"), Seq("node"), "left")
-      .join(indeg, Seq("node"), "left")
-      .join(ranks, Seq("node"))
-      .select(col("node"),
-        coalesce(col("outdeg"), lit(0L)).as("outdeg"),
-        coalesce(col("indeg"), lit(0L)).as("indeg"),
-        col("r").as("rank_fp"))
   }
 }

@@ -19,12 +19,16 @@ import graft.tables.SnapshotTable
  *     -> mapPartitions(ExtractKernel)                   (the "container")
  *     -> append to SnapshotTable + atomic commit        (uploader/K1)
  *
- * Explicit physical decisions (north_rule): exactly one shuffle (the salted
- * repartition); the scan prunes to (url, html) so the fat binary column is
- * the only payload moved; the anti-join build side is the committed url set
- * (sort-merge at scale — NOT broadcast, the done-set grows unboundedly);
- * partition count P and salt count S are explicit inputs sized for
- * ~128MB html per task at the target scale.
+ * Explicit physical decisions (north_rule): the scan prunes to (url, html)
+ * so the fat binary column is the only payload moved, and on a fresh table
+ * the salted repartition is the only exchange. Resume adds exchanges of its
+ * own: the per-url failure aggregate (read once; its exchange is shared by
+ * the done set and the retry counts) and, once the done set outgrows
+ * broadcast, the anti-join's — sort-merge shuffles the fat side too, which
+ * is why a done set past `bloomResumeMinRows` takes the Bloom-pruned
+ * anti-join that never exchanges it. The chain is read once, with a known
+ * schema (`SnapshotTable.resumeInputs`). Partition count P and salt count S
+ * are explicit inputs sized for ~128MB html per task at the target scale.
  */
 object Extract {
 
@@ -66,8 +70,6 @@ object Extract {
     // (src/queue.py:24-33 keys raw strings).
     val pages = pagesDf.select(col("url"), col("html"))
       .withColumn("url_key", graft.functions.UrlFunctions.urlKey(col("url")))
-    def keyed(done: DataFrame): DataFrame =
-      done.select(graft.functions.UrlFunctions.urlKey(col("url")).as("url_key"))
 
     // Resume (S1/S2, the claim query the reference revolves around —
     // src/queue.py:24-33). Two exact, row-identical strategies:
@@ -78,12 +80,15 @@ object Extract {
     //    needs (see operators/BloomResume.scala). The manifest row total
     //    upper-bounds distinct done urls, so the filter is never undersized
     //    by more than the retry fraction (fpp degrades, exactness doesn't).
-    val notDone = table.doneUrls(spark, maxRetries) match {
-      case Some(done) =>
+    val resume = table.resumeInputs(spark)
+    val notDone = resume match {
+      case Some(r) =>
+        val done = r.done(maxRetries)
+          .select(graft.functions.UrlFunctions.urlKey(col("url")).as("url_key"))
         table.chainRowTotal match {
           case Some(est) if est >= bloomResumeMinRows =>
-            graft.operators.BloomResume.bloomAntiJoin(pages, keyed(done), "url_key", est)
-          case _ => pages.join(keyed(done), Seq("url_key"), "left_anti")
+            graft.operators.BloomResume.bloomAntiJoin(pages, done, "url_key", est)
+          case _ => pages.join(done, Seq("url_key"), "left_anti")
         }
       case None => pages
     }
@@ -91,7 +96,9 @@ object Extract {
     // by construction (failed-but-retryable urls only) so Catalyst/AQE will
     // normally broadcast it — but the hint is NOT forced: a pathological
     // all-failing corpus must degrade to a shuffle join, not OOM the driver.
-    val pending = table.retryAttempts(spark, maxRetries) match {
+    // A retryable url that later succeeded needs no anti-join here: its key
+    // is in the done set, so no pending row can pick its count up.
+    val pending = resume.flatMap(_.retryable(maxRetries)) match {
       case Some(att) =>
         // pre-aggregate to ONE row per url_key (max attempts across url
         // spellings that canonicalize together): the left join then cannot

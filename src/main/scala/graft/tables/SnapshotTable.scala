@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /**
  * Iceberg-style snapshot table built from scratch (no Iceberg jar in
@@ -23,11 +24,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * snapshot intact and the partial data dir unreferenced.
  *
  * Readers see the union of the snapshot chain (each snapshot appends data
- * files). `doneUrls` powers incremental resume via left-anti join.
+ * files). Resume reads the chain once: `resumeInputs` is one parquet read
+ * of the (url, error) columns with that schema given (no schema-inference
+ * job), split into the success urls and one per-url failure aggregate over
+ * the failed rows. `doneUrls` (successes plus terminal failures, the
+ * left-anti side of incremental resume) and `retryAttempts` (the re-drive
+ * set) are both built from it.
  */
 object SnapshotTable {
   /** Reference default: src/settings.py:49 MAX_RETRIES = 3. */
   val DefaultMaxRetries = 3
+
+  /** The columns resume reads from every snapshot's data files. */
+  private val ResumeSchema: StructType = StructType(Seq(
+    StructField("url", StringType), StructField("error", StringType)))
+
+  /** See [[SnapshotTable.resumeInputs]]. */
+  final case class ResumeInputs(ok: DataFrame, fails: Option[DataFrame]) {
+    import org.apache.spark.sql.functions.col
+    /** Urls with a success or with maxRetries failed attempts. */
+    def done(maxRetries: Int): DataFrame =
+      fails.fold(ok)(f => ok.union(f.filter(col("fails") >= maxRetries).select("url")))
+    /** (url, prior_attempts) of failed urls still below maxRetries, whether
+      * or not they later succeeded. */
+    def retryable(maxRetries: Int): Option[DataFrame] =
+      fails.map(_.filter(col("fails") < maxRetries)
+        .select(col("url"), col("fails").cast("int").as("prior_attempts")))
+  }
 }
 
 final class SnapshotTable(dirStr: String) {
@@ -114,47 +137,41 @@ final class SnapshotTable(dirStr: String) {
     * retry-then-terminal state machine (/root/reference/src/queue.py:59-78,
     * MAX_RETRIES at src/settings.py:49): a row that failed fewer than
     * maxRetries times stays pending and is re-driven by the next run.
-    *
-    * Fast path: when the chain's manifest metrics record zero failures, the
-    * done set is the plain column-pruned url scan (no aggregate) — the
-    * common case costs nothing extra. */
-  def doneUrls(spark: SparkSession, maxRetries: Int = DefaultMaxRetries): Option[DataFrame] = {
+    * Duplicate urls in the union are harmless for the anti-join consumer. */
+  def doneUrls(spark: SparkSession, maxRetries: Int = DefaultMaxRetries): Option[DataFrame] =
+    resumeInputs(spark).map(_.done(maxRetries))
+
+  /** (url, prior_attempts) for urls that failed but are still retryable and
+    * never succeeded — the re-drive set. None when the chain is empty or
+    * recorded no failures. Small by construction: Catalyst/AQE will
+    * broadcast it. */
+  def retryAttempts(spark: SparkSession, maxRetries: Int = DefaultMaxRetries): Option[DataFrame] =
+    resumeInputs(spark).flatMap(r =>
+      r.retryable(maxRetries).map(_.join(r.ok, Seq("url"), "left_anti")))
+
+  /** The chain's resume inputs, from ONE parquet read of its (url, error)
+    * columns with that schema given, so building them runs no
+    * schema-inference job. (Listing the data files still runs a Spark job
+    * once the chain has more dirs than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold`, default 32.)
+    *  - `ok`: urls with a successful row (every url when the manifests
+    *    record no failures: then it is the plain column-pruned url scan);
+    *  - `fails`: (url, fails) — failed attempts per url, aggregated over
+    *    the failed rows only (error IS NOT NULL pushes to the scan), so
+    *    resume costs one success scan plus failure-proportional work, never
+    *    a full-chain groupBy. None when the manifests record no failures.
+    * None when the chain is empty. */
+  def resumeInputs(spark: SparkSession): Option[SnapshotTable.ResumeInputs] = {
     import org.apache.spark.sql.functions._
     val dirs = visibleDataDirs
     if (dirs.isEmpty) None
-    else if (chainFailedTotal.contains(0L))
-      Some(spark.read.parquet(dirs: _*).select("url"))
     else {
-      // done = any success  ∪  terminally-failed. The aggregate touches ONLY
-      // the failed subset (error IS NOT NULL pushes to the scan), so the
-      // resume cost stays success-scan + failure-proportional work — never a
-      // full-chain groupBy. Duplicate urls in the union are harmless for the
-      // anti-join consumer.
-      val t = spark.read.parquet(dirs: _*).select(col("url"), col("error"))
-      val ok = t.filter(col("error").isNull).select("url")
-      val terminal = t.filter(col("error").isNotNull)
-        .groupBy("url").agg(count(lit(1)).as("fails"))
-        .filter(col("fails") >= maxRetries).select("url")
-      Some(ok.union(terminal))
-    }
-  }
-
-  /** (url, prior_attempts) for urls that failed but are still retryable —
-    * the re-drive set. None when the chain is empty or recorded no failures.
-    * Aggregates only the failed subset, then anti-joins away urls that later
-    * succeeded. Small by construction: Catalyst/AQE will broadcast it. */
-  def retryAttempts(spark: SparkSession, maxRetries: Int = DefaultMaxRetries): Option[DataFrame] = {
-    import org.apache.spark.sql.functions._
-    val dirs = visibleDataDirs
-    if (dirs.isEmpty || chainFailedTotal.contains(0L)) None
-    else {
-      val t = spark.read.parquet(dirs: _*).select(col("url"), col("error"))
-      val ok = t.filter(col("error").isNull).select("url")
-      Some(t.filter(col("error").isNotNull)
-        .groupBy("url").agg(count(lit(1)).as("fails"))
-        .filter(col("fails") < maxRetries)
-        .join(ok, Seq("url"), "left_anti")
-        .select(col("url"), col("fails").cast("int").as("prior_attempts")))
+      val t = spark.read.schema(SnapshotTable.ResumeSchema).parquet(dirs: _*)
+      if (chainFailedTotal.contains(0L)) Some(SnapshotTable.ResumeInputs(t.select("url"), None))
+      else Some(SnapshotTable.ResumeInputs(
+        t.filter(col("error").isNull).select("url"),
+        Some(t.filter(col("error").isNotNull)
+          .groupBy("url").agg(count(lit(1)).as("fails")))))
     }
   }
 

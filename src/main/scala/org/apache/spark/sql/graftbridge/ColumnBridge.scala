@@ -11,13 +11,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Eager ColumnNode -> Catalyst conversion. `expression` returns a LAZY
-    * `ColumnNodeExpression` wrapper, which DataFrame entry points convert
-    * during their own analysis; an expression returned from a SQL
-    * FunctionRegistry builder is past that phase, so the wrapper would
-    * survive to codegen and fail as Unevaluable. Converting eagerly yields
-    * the plain (unresolved) expression tree the analyzer expects. */
-  def eagerExpression(c: Column): Expression =
-    org.apache.spark.sql.classic.ColumnNodeToExpressionConverter.apply(c.node)
 }

@@ -26,9 +26,14 @@ class EntrySpec extends AnyFunSuite {
   }
 
   test("all queries run and return rows at sf0.001") {
+    // no query may leave a cached frame behind: a later query, or a
+    // re-timing of the same one, would hit it
+    val cacheManager = spark.sharedState.cacheManager
+    spark.catalog.clearCache() // frames other suites cached in this JVM
     SparkEntry.queries.foreach { case (name, fn) =>
       val n = fn(spark, "/root/testdata/sf0.001").count()
       assert(n > 0, s"query $name returned no rows")
+      assert(cacheManager.isEmpty, s"query $name left a cached frame behind")
     }
   }
 

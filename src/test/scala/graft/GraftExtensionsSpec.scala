@@ -53,11 +53,20 @@ class GraftExtensionsSpec extends AnyFunSuite {
         |               array(CAST(2.0 AS FLOAT), CAST(0.5 AS FLOAT))) AS d,
         |       canonicalize_url('HTTP://User@Example.COM:80/a?b=2&a=1#frag') AS cu,
         |       url_key('HTTP://User@Example.COM:80/a?b=2&a=1#frag') AS k,
-        |       canonicalize_url('not a url') AS passthru
+        |       canonicalize_url('not a url') AS passthru,
+        |       canonicalize_url(NULL) AS cu_null,
+        |       url_key(NULL) AS k_null,
+        |       canonicalize_url(42) AS cu_int,
+        |       url_key(X'6869') = url_key('hi') AS k_binary
         |""".stripMargin).collect().head
     assert(r.getAs[Double]("d") === 1.5 * 2.0 + (-2.0) * 0.5)
     assert(r.getAs[String]("cu") === "http://User@example.com/a?a=1&b=2")
     assert(r.getAs[String]("passthru") === "not a url")
+    // non-string arguments cast to STRING, as with the string built-ins
+    assert(r.isNullAt(r.fieldIndex("cu_null")))
+    assert(r.getAs[Long]("k_null") === 42L)
+    assert(r.getAs[String]("cu_int") === "42")
+    assert(r.getAs[Boolean]("k_binary"))
     val viaApi = {
       import org.apache.spark.sql.functions._
       spark.range(1).select(graft.functions.UrlFunctions.urlKey(

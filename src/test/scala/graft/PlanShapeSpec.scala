@@ -247,6 +247,67 @@ class PlanShapeSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
+  test("resume: building the done set and retry counts runs no Spark job; " +
+       "the real write plan scans the chain's successes once") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.kernel.ExtractKernel.{ExtractedDoc, Lineage}
+    val sc = spark.sparkContext
+    val dir = Files.createTempDirectory("plan-pages5").toString
+    spark.range(60).mapPartitions(_.map(i => graft.fixtures.PageGen.page(i, 42L)))
+      .write.mode("overwrite").parquet(dir)
+    val pages = spark.read.parquet(dir)
+    val table = new graft.tables.SnapshotTable(Files.createTempDirectory("plan-table").toString)
+    // a chain with successes (snapshot 0) and failures (snapshot 1), and
+    // pages still pending for the pass under test
+    val (done, rest) = pages.select("url").as[String].collect().sorted.splitAt(40)
+    graft.pipeline.Extract.run(spark, pages.filter(col("url").isin(done: _*)), table,
+      numSalts = 4, numPartitions = 2)
+    val failed = rest.take(3).toSeq.map(u => ExtractedDoc(u, "html", null, null, null,
+      Array.empty, 0.5, 0L, "boom", Lineage(0, 0, "error")))
+    table.commit(failed.toDS().toDF(), Map("input" -> 3L, "extracted" -> 0L, "failed" -> 3L))
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val countJobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBusDrain(sc)
+    sc.addSparkListener(countJobs)
+    try {
+      assert(table.doneUrls(spark).nonEmpty && table.retryAttempts(spark).nonEmpty)
+      org.apache.spark.graft.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(countJobs)
+    assert(jobs.get === 0, "building the resume frames launched Spark jobs")
+
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan.toString // the final plan
+          case p => p.toString
+        })
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(capture)
+    try {
+      graft.pipeline.Extract.run(spark, pages, table, numSalts = 4, numPartitions = 2)
+      org.apache.spark.graft.ListenerBusDrain(sc)
+    } finally spark.listenerManager.unregister(capture)
+    val write = plans.toArray(Array.empty[String])
+      .find(_.contains("InsertIntoHadoopFsRelationCommand")).getOrElse(fail("no write plan"))
+    def scans(filter: String) =
+      write.linesIterator.count(l => l.contains("FileScan") && l.contains(s"DataFilters: [$filter(error"))
+    val successScans = scans("isnull")
+    assert(successScans === 1, s"chain successes scanned $successScans times:\n$write")
+    // the per-url failure aggregate feeds both the done set and the retry
+    // counts; its exchange is reused, so the failed rows are scanned once too
+    val failureScans = scans("isnotnull")
+    assert(failureScans === 1, s"chain failures scanned $failureScans times:\n$write")
+  }
+
   test("aggregates use partial (map-side) aggregation") {
     val plan = planOf(SparkEntry.queries("q_lang_stats")(spark, sf))
     // two HashAggregate nodes: partial + final
@@ -288,7 +349,7 @@ class PlanShapeSpec extends AnyFunSuite {
     import spark.implicits._
     val edges = Seq.tabulate(64)(i => (s"h${i % 8}", s"h${(i * 3 + 1) % 8}"))
       .toDF("src", "dst")
-    val plan = planOf(graft.operators.LinkGraph.pageRank(edges, iters = 3))
+    val plan = graft.operators.LinkGraph.withPageRank(edges, iters = 3)(planOf)
     assert(!plan.contains("CartesianProduct"), s"cartesian in plan:\n$plan")
     assert(!plan.contains("BroadcastNestedLoopJoin"),
       s"nested-loop join in plan:\n$plan")

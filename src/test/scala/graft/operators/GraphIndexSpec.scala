@@ -16,7 +16,7 @@ class GraphIndexSpec extends AnyFunSuite {
 
   // ------------------------------------------------------------ pageRank
   /** Executable reference: the exact fixed-point formula on driver-side
-    * maps, mirroring LinkGraph.pageRank's documented semantics. */
+    * maps, mirroring LinkGraph.withPageRank's documented semantics. */
   private def refPageRank(edges: Seq[(String, String)], iters: Int,
                           scale: Long): Map[String, Long] = {
     val e = edges.distinct
@@ -38,8 +38,8 @@ class GraphIndexSpec extends AnyFunSuite {
   test("pageRank matches the fixed-point reference formula exactly") {
     val edges = Seq(("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"),
       ("d", "a"), ("a", "d"), ("b", "a"))
-    val out = LinkGraph.pageRank(edges.toDF("src", "dst"), iters = 5)
-      .collect().map(r => r.getString(0) -> r.getLong(3)).toMap
+    val out = LinkGraph.withPageRank(edges.toDF("src", "dst"), iters = 5)(_.collect())
+      .map(r => r.getString(0) -> r.getLong(3)).toMap
     val ref = refPageRank(edges, iters = 5, scale = 1000000000000L)
     assert(out === ref)
     // sanity: the most-linked node outranks the leaf
@@ -48,7 +48,7 @@ class GraphIndexSpec extends AnyFunSuite {
 
   test("pageRank collapses duplicate edges and reports degrees") {
     val edges = Seq(("a", "b"), ("a", "b"), ("b", "a")).toDF("src", "dst")
-    val out = LinkGraph.pageRank(edges, iters = 2).collect()
+    val out = LinkGraph.withPageRank(edges, iters = 2)(_.collect())
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(out === Map("a" -> ((1L, 1L)), "b" -> ((1L, 1L))))
   }
@@ -56,8 +56,7 @@ class GraphIndexSpec extends AnyFunSuite {
   test("pageRank: dangling node keeps its base rank, sink-only node included") {
     // c has no out-edges (dangling); it still receives, never contributes
     val edges = Seq(("a", "c"), ("b", "c"), ("a", "b"))
-    val df = LinkGraph.pageRank(edges.toDF("src", "dst"), iters = 3)
-    val rows = df.collect().map(r =>
+    val rows = LinkGraph.withPageRank(edges.toDF("src", "dst"), iters = 3)(_.collect()).map(r =>
       r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(rows("c")._1 === 0L) // outdeg
     assert(rows("c")._2 === 2L) // indeg

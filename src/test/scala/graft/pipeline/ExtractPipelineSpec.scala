@@ -122,6 +122,43 @@ class ExtractPipelineSpec extends AnyFunSuite {
     assert(post.getOrElse("done", 0L) + post.getOrElse("done_empty", 0L) === 19)
   }
 
+  for ((label, bloomMin) <- Seq("plain-anti" -> Long.MaxValue, "forced-bloom" -> 0L))
+  test(s"resume over url spellings: max attempts per key, terminal or success spelling is done [$label]") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.kernel.ExtractKernel.{ExtractedDoc, Lineage}
+    val table = new SnapshotTable(tmp("table5"))
+    // three keys, two committed spellings each
+    val (a1, a2) = ("https://Example.COM/a?x=1&y=2", "https://example.com:443/a?y=2&x=1#f")
+    val (b1, b2) = ("http://B.org/p", "HTTP://b.org:80/p")
+    val (c1, c2) = ("http://c.org/q?b&a", "http://C.ORG/q?a&b")
+    def failed(u: String, att: Int) = ExtractedDoc(u, "html", null, null, null,
+      Array.empty, 0.5, 0L, "transient: simulated", Lineage(0, att, "error"))
+    val ok = ExtractedDoc(c2, "html", "ok text", null, null, Array.empty, 0.5, 7L, null,
+      Lineage(0, 0, "t"))
+    val chain = Seq(
+      failed(a1, 0),                                  // a: 1 and 2 failures
+      failed(a2, 0), failed(a2, 1),
+      failed(b1, 0), failed(b1, 1), failed(b1, 2),    // b: terminal + retryable
+      failed(b2, 0),
+      failed(c1, 0), ok)                              // c: failed + succeeded
+    table.commit(chain.toDS().toDF(), Map("input" -> 9L, "extracted" -> 1L, "failed" -> 8L))
+
+    def page(u: String) =
+      (u, s"<html><body><p>${"page body words " * 10}</p></body></html>"
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val fresh = "https://fresh.org/1"
+    val pages = Seq(a1, a2, b1, b2, c1, c2, fresh).map(page).toDF("url", "html")
+    val m = Extract.run(spark, pages, table, numSalts = 4, numPartitions = 2,
+      bloomResumeMinRows = bloomMin)
+    assert(m.input === 2, s"only key a (once) and the fresh url are pending: ${m.input}")
+    assert(table.manifest(1).get.metrics("deduped") === 1)
+    val written = table.read(spark).filter(col("error").isNull && col("url") =!= c2)
+      .select(col("url"), col("lineage.attempt")).as[(String, Int)].collect().toMap
+    // key a re-driven once, from its smallest spelling, with the larger count
+    assert(written === Map(a1 -> 2, fresh -> 0), s"$written")
+  }
+
   test("canonical url keys: case/port/fragment/param-order variants collapse to one extraction") {
     import spark.implicits._
     val tableDir = tmp("table4")
