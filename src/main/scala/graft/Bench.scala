@@ -82,19 +82,13 @@ object Bench {
 
   /** Extraction pages/sec at the session's parallelism over `rows` pages. */
   def extractThroughput(spark: SparkSession, rows: Long, partitions: Int): (Double, Long) = {
-    import spark.implicits._
     val dir = materializeCorpus(spark, rows)
     val pages = spark.read.parquet(dir).select(col("url"), col("html"))
     val t0 = System.nanoTime()
-    val n = pages
+    val salted = pages
       .withColumn("salt", pmod(xxhash64(col("url")), lit(256)).cast("int"))
       .repartition(partitions, col("salt"))
-      .select(col("url"), col("html"))
-      .as[graft.pipeline.Extract.PageSlim]
-      .mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        it.map(p => graft.kernel.ExtractKernel.extractOne(p.url, p.html, pid, 0))
-      }
+    val n = graft.pipeline.Extract.kernelPages(salted)
       .toDF() // stay in InternalRow: filter/count without re-deserializing
       .filter(col("error").isNull)
       .count()

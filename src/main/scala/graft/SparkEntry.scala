@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
+import graft.pipeline.Extract
 
 /**
  * Driver contract (see SURVEY.md §7): one `queries` entry per implemented
@@ -97,7 +98,7 @@ object SparkEntry {
   }
 
   /** Flagship: the full extraction pipeline (scan -> salt/repartition ->
-    * mapPartitions kernel) over a deterministic 1k-page synthesized corpus
+    * Extract.kernel) over a deterministic 1k-page synthesized corpus
     * (BASELINE.json: "synthesise it deterministically at small scale").
     * Driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
@@ -108,12 +109,7 @@ object SparkEntry {
     val salted = pages
       .withColumn("salt", pmod(xxhash64(col("url")), lit(64)).cast("int"))
       .repartition(8, col("salt"))
-      .select(col("url"), col("html"))
-      .as[graft.pipeline.Extract.PageSlim]
-    salted.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      it.map(p => graft.kernel.ExtractKernel.extractOne(p.url, p.html, pid, 0))
-    }.toDF().select("url", "doc_type", "n_chars", "quality")
+    Extract.kernelPages(salted).toDF().select("url", "doc_type", "n_chars", "quality")
   }
 
   // O4 quality-count helpers (ASCII approximation shared verbatim with the
@@ -820,11 +816,7 @@ object SparkEntry {
       val pages = corpus.select(
           concat(lit("doc://"), col("doc_id")).as("url"),
           encode(deco, "UTF-8").as("html"))
-        .as[graft.pipeline.Extract.PageSlim]
-      val extracted = pages.mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        it.map(p => graft.kernel.ExtractKernel.extractOne(p.url, p.html, pid, 0))
-      }.toDF()
+      val extracted = Extract.kernelPages(pages).toDF()
         .select(substring(col("url"), 7, 32).cast("long").as("doc_id"),
           col("extracted_text"))
       // quality gate + scrub are WHERE/projection columns in the same stage
@@ -1038,12 +1030,7 @@ object SparkEntry {
       val salted = pages
         .withColumn("salt", pmod(xxhash64(col("url")), lit(64)).cast("int"))
         .repartition(col("salt"))
-        .select(col("url"), col("html"))
-        .as[graft.pipeline.Extract.PageSlim]
-      salted.mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        it.map(p => graft.kernel.ExtractKernel.extractOne(p.url, p.html, pid, 0))
-      }.toDF()
+      Extract.kernelPages(salted).toDF()
         .select(col("url"), col("doc_type"),
           md5(coalesce(col("extracted_text"), lit(""))).as("text_md5"),
           col("n_chars"), size(col("spans")).cast("long").as("n_spans"))
@@ -1059,10 +1046,8 @@ object SparkEntry {
         .mapPartitions(_.map { case (id, t) =>
           ("doc://" + id,
             (if (t == null) "" else t).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        }).toDF("url", "html").as[graft.pipeline.Extract.PageSlim]
-      pages.mapPartitions { it =>
-        it.map(p => graft.kernel.ExtractKernel.extractOne(p.url, p.html, 0, 0))
-      }.toDF()
+        }).toDF("url", "html")
+      Extract.kernelPages(pages).toDF()
         .select(col("url"), col("doc_type"), col("extracted_text"))
         .orderBy("url")
     }),
@@ -1071,11 +1056,7 @@ object SparkEntry {
       import s.implicits._
       val pages = s.range(2000)
         .mapPartitions(_.map(i => graft.fixtures.PageGen.page(i, 42L))).toDF()
-        .select(col("url"), col("html"))
-        .as[graft.pipeline.Extract.PageSlim]
-      pages.mapPartitions { it =>
-        it.map(p => graft.kernel.ExtractKernel.extractOne(p.url, p.html, 0, 0))
-      }.toDF()
+      Extract.kernelPages(pages).toDF()
         .withColumn("status",
           when(col("error").isNotNull, "error")
             .when(col("extracted_text").isNotNull, "done")

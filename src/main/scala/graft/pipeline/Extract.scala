@@ -1,11 +1,12 @@
 package graft.pipeline
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
 import graft.kernel.ExtractKernel
+import graft.kernel.ExtractKernel.ExtractedDoc
 import graft.tables.SnapshotTable
 
 /**
@@ -13,11 +14,14 @@ import graft.tables.SnapshotTable
  * (fetcher -> orchestrator -> processor -> uploader,
  * /root/reference/src/orchestrator.py + app.py) as ONE Spark job:
  *
- *   scan pages (column-pruned to url+html)
+ *   scan pages (column-pruned to url+html, keyed on url_key)
  *     -> anti-join against committed output snapshot   (resume; S1/S2)
- *     -> salt on xxhash64(url) + repartition            (skew defuse; §4.3)
- *     -> mapPartitions(ExtractKernel)                   (the "container")
+ *     -> salt on url_key + repartition + local sort     (skew defuse; §4.3)
+ *     -> Extract.kernel                                 (the "container")
  *     -> append to SnapshotTable + atomic commit        (uploader/K1)
+ *
+ * `Extract.kernel` is the one kernel stage: the streams, the bench and the
+ * extraction queries run it too, so every path extracts the same way.
  *
  * Explicit physical decisions (north_rule): the scan prunes to (url, html)
  * so the fat binary column is the only payload moved, and on a fresh table
@@ -40,11 +44,33 @@ object Extract {
   final case class Metrics(version: Int, input: Long, extracted: Long,
                            failed: Long, bytesIn: Long)
 
-  final case class PageSlim(url: String, html: Array[Byte])
-  /** Pending row with its retry count (prior failed attempts, 0 first time)
-    * and the canonical url key it salts/dedups/resumes on. */
-  final case class PageJob(url: String, html: Array[Byte], prior_attempts: Int,
-                           url_key: Long)
+  /** A page for the kernel stage, with its retry count (prior failed
+    * attempts, 0 the first time). */
+  final case class PageJob(url: String, html: Array[Byte], prior_attempts: Int)
+  /** A pending row of `run` with the canonical url key it salts, dedups and
+    * resumes on. */
+  final case class KeyedJob(url: String, html: Array[Byte], prior_attempts: Int,
+                            url_key: Long)
+
+  /** The kernel stage: the one place a Dataset of pages becomes extracted
+    * docs. Each doc's lineage is (task partition, `prior_attempts` + the
+    * task's attempt number), so a re-run task records its retry. */
+  def kernel(jobs: Dataset[PageJob]): Dataset[ExtractedDoc] = {
+    val spark = jobs.sparkSession
+    import spark.implicits._
+    jobs.mapPartitions { it =>
+      val pid = TaskContext.getPartitionId()
+      val taskRetry = Option(TaskContext.get()).map(_.attemptNumber()).getOrElse(0)
+      it.map(j => ExtractKernel.extractOne(j.url, j.html, pid, j.prior_attempts + taskRetry))
+    }
+  }
+
+  /** [[kernel]] over `(url, html)` pages with no retry history. */
+  def kernelPages(pages: DataFrame): Dataset[ExtractedDoc] = {
+    val spark = pages.sparkSession
+    import spark.implicits._
+    kernel(pages.select(col("url"), col("html"), lit(0).as("prior_attempts")).as[PageJob])
+  }
 
   /** Run one incremental extraction pass. Quarantine semantics follow the
     * reference's retry-then-terminal state machine (src/queue.py:59-78): a
@@ -115,8 +141,6 @@ object Extract {
     }
 
     val bytesIn: LongAccumulator = spark.sparkContext.longAccumulator("graft.bytesIn")
-    val docsOk = spark.sparkContext.longAccumulator("graft.docsOk")
-    val docsFailed = spark.sparkContext.longAccumulator("graft.docsFailed")
     // per-partition lineage (K5 analog of the reference's per-job processor
     // log): (partition, docs, ms) — the partition-time histogram is the
     // evidence that salting defused host skew (§4.3)
@@ -124,51 +148,46 @@ object Extract {
 
     // Salt on the canonical key (variants share a salt, hence a partition),
     // then sort within partitions by (url_key, url): the spillable external
-    // sort groups variant spellings adjacently so the kernel iterator
+    // sort groups variant spellings adjacently so the typed step below
     // collapses them streaming — deterministic (lexicographically smallest
     // spelling survives), no per-partition buffering, and still exactly one
     // exchange (the Sort is partition-local).
     val docsDeduped = spark.sparkContext.longAccumulator("graft.docsDeduped")
-    val salted = pending
+    val sorted = pending
       .withColumn("salt", pmod(col("url_key"), lit(numSalts)).cast("int"))
       .repartition(p, col("salt"))
       .sortWithinPartitions(col("url_key"), col("url"))
       .select(col("url"), col("html"), col("prior_attempts"), col("url_key"))
-      .as[PageJob]
+      .as[KeyedJob]
 
-    val extracted = salted.mapPartitions { it =>
+    // The typed step that feeds the kernel: variant collapse, bytes_in and
+    // partition stats. The kernel pulls from it, so when it runs dry every
+    // row of the partition has been extracted; the by-name tail of `++`
+    // records the stats then, once. The two typed steps deserialize and
+    // serialize once (EliminateSerialization drops the PageJob round trip
+    // between them).
+    val jobs = sorted.mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
-      val taskRetry = Option(TaskContext.get()).map(_.attemptNumber).getOrElse(0)
       val t0 = System.nanoTime()
       var nDocs = 0L
       var prevKey = 0L
       var first = true
-      val mapped = it.filter { pg =>
-        val keep = first || pg.url_key != prevKey
-        prevKey = pg.url_key; first = false
+      val kept = it.filter { r =>
+        val keep = first || r.url_key != prevKey
+        prevKey = r.url_key; first = false
         if (!keep) docsDeduped.add(1)
         keep
-      }.map { pg =>
-        bytesIn.add(if (pg.html == null) 0 else pg.html.length.toLong)
-        val doc = ExtractKernel.extractOne(pg.url, pg.html, pid,
-          pg.prior_attempts + taskRetry)
-        if (doc.error == null) docsOk.add(1) else docsFailed.add(1)
+      }.map { r =>
+        bytesIn.add(if (r.html == null) 0 else r.html.length.toLong)
         nDocs += 1
-        doc
+        PageJob(r.url, r.html, r.prior_attempts)
       }
-      new Iterator[ExtractKernel.ExtractedDoc] {
-        private var recorded = false
-        override def hasNext: Boolean = {
-          val h = mapped.hasNext
-          if (!h && !recorded) {
-            recorded = true
-            partStats.add((pid, nDocs, (System.nanoTime() - t0) / 1000000L))
-          }
-          h
-        }
-        override def next(): ExtractKernel.ExtractedDoc = mapped.next()
+      kept ++ {
+        partStats.add((pid, nDocs, (System.nanoTime() - t0) / 1000000L))
+        Iterator.empty[PageJob]
       }
     }
+    val extracted = kernel(jobs)
 
     // single action: write the data files (error column stays with the data,
     // so one pass covers both success and quarantine rows), then publish the
@@ -199,14 +218,6 @@ object Extract {
     table.commitManifest(version, snapDir, metrics, lineage = lineageRows)
     Metrics(version, written, ok, written - ok, bytesIn.value)
   }
-
-  /** Quarantined rows of the current snapshot (K2 semantics): every failed
-    * attempt row, with its attempt number. A url appears once per failed
-    * attempt (the retry history); filter `attempt >= maxRetries - 1` for
-    * terminal rows only. */
-  def quarantine(spark: SparkSession, table: SnapshotTable): DataFrame =
-    table.read(spark).filter(col("error").isNotNull)
-      .select("url", "error", "lineage.partition_id", "lineage.attempt")
 
   /** A1-style status rollup over the output table (src/queue.py:80-96),
     * resolved per url across retries: done / done_empty on any success,

@@ -4,14 +4,17 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
+import graft.pipeline.Extract
+
 /**
  * Structured Streaming surface: the reference's polling loops
  * (fetcher/orchestrator/uploader glob+sleep, SURVEY.md §2.1 S4) expressed
  * as real streams. The batch pipeline stays primary (snapshot diff resume);
  * these operators cover the continuous-ingest shape:
  *
- *  - streamingExtract: readStream over a pages directory -> extraction
- *    kernel -> append sink (the "worker loop" as a stream);
+ *  - streamingExtract: readStream over a pages directory -> the batch
+ *    pipeline's kernel stage (`Extract.kernel`) -> append sink (the
+ *    "worker loop" as a stream);
  *  - eventRollup: watermarked tumbling-window counts (A1 as a stream);
  *  - firstSeenUrls: stateful exactly-once-per-url gate via
  *    mapGroupsWithState (the queue's claim semantics as stream state).
@@ -20,21 +23,13 @@ object StreamingExtract {
 
   /** Continuous extraction over files arriving in `pagesDir`. */
   def streamingExtract(spark: SparkSession, pagesDir: String): DataFrame = {
-    import spark.implicits._
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("url", org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("warc_ts", org.apache.spark.sql.types.TimestampType),
       org.apache.spark.sql.types.StructField("html", org.apache.spark.sql.types.BinaryType),
       org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("lang", org.apache.spark.sql.types.StringType)))
-    spark.readStream.schema(schema).parquet(pagesDir)
-      .select(col("url"), col("html"))
-      .as[graft.pipeline.Extract.PageSlim]
-      .mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        it.map(p => graft.kernel.ExtractKernel.extractOne(p.url, p.html, pid, 0))
-      }
-      .toDF()
+    Extract.kernelPages(spark.readStream.schema(schema).parquet(pagesDir)).toDF()
   }
 
   /** Watermarked tumbling-window event rollup (K6/A1 as a stream). */
@@ -93,22 +88,14 @@ object StreamingExtract {
       org.apache.spark.sql.types.StructField("modificationTime", org.apache.spark.sql.types.TimestampType),
       org.apache.spark.sql.types.StructField("length", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("content", org.apache.spark.sql.types.BinaryType)))
-    val extracted = spark.readStream.format("binaryFile")
+    val jobs = spark.readStream.format("binaryFile")
       .schema(binaryFileSchema)
       .option("pathGlobFilter", "*.{warc,warc.gz}")
       .load(warcDir)
       .select(col("content")).as[Array[Byte]]
-      .mapPartitions { files =>
-        val pid = Option(org.apache.spark.TaskContext.get())
-          .map(_.partitionId()).getOrElse(0)
-        files.flatMap { bytes =>
-          graft.sources.warc.WarcBytes.records(bytes, httpBody).map { r =>
-            graft.kernel.ExtractKernel.extractOne(r.url, r.content, pid, 0)
-          }
-        }
-      }
-      .toDF()
-    qualityGate(extracted, minWords)
+      .flatMap(bytes => graft.sources.warc.WarcBytes.records(bytes, httpBody)
+        .map(r => Extract.PageJob(r.url, r.content, 0)))
+    qualityGate(Extract.kernel(jobs).toDF(), minWords)
   }
 
   final case class UrlSeen(url: String, first_ts: Long)

@@ -2,13 +2,22 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{DeserializeToObjectExec, QueryExecution,
+  SerializeFromObjectExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.Files
 
 /** Physical-plan assertions: the plans we ship are the plans we designed
   * (column pruning to (url, html), filter pushdown to parquet, broadcast
-  * only where intended, whole-stage codegen on the SQL surface, exactly
-  * one exchange in the flagship pipeline). */
+  * only where intended, whole-stage codegen on the SQL surface). The
+  * flagship pins run the real `Extract.run` and assert on the write plan it
+  * executed: on a fresh table exactly one exchange (the salted repartition)
+  * and one encoder round trip through `Extract.kernel`; on resume, html
+  * still crosses only that exchange. */
 class PlanShapeSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSession.builder()
@@ -24,17 +33,56 @@ class PlanShapeSpec extends AnyFunSuite {
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  test("extraction scan prunes to (url, html) — the fat column plus key only") {
+  /** A directory of `n` PageGen pages (seed 42). */
+  private def pagesDir(n: Int): String = {
     import spark.implicits._
     val dir = Files.createTempDirectory("plan-pages").toString
-    spark.range(100).mapPartitions(_.map(i => graft.fixtures.PageGen.page(i, 42L)))
+    spark.range(n).mapPartitions(_.map(i => graft.fixtures.PageGen.page(i, 42L)))
       .write.mode("overwrite").parquet(dir)
-    val pipeline = spark.read.parquet(dir)
-      .select(col("url"), col("html"))
-      .withColumn("salt", pmod(xxhash64(col("url")), lit(16)).cast("int"))
-      .repartition(4, col("salt"))
-      .select(col("url"), col("html"))
-    val plan = planOf(pipeline)
+    dir
+  }
+
+  /** The final plan of the parquet write that `body` runs (the adaptive
+    * plan's final form when AQE is on). */
+  private def writePlanOf(body: => Unit): SparkPlan = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val capture = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case p => p
+        })
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(capture)
+    try {
+      body
+      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(capture)
+    plans.toArray(Array.empty[SparkPlan])
+      .find(_.toString.contains("InsertIntoHadoopFsRelationCommand"))
+      .getOrElse(fail("no write plan"))
+  }
+
+  /** Every node of `p`, looking through adaptive plans, query stages and
+    * reused exchanges (all leaves to `collect`). */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case r: ReusedExchangeExec => nodes(r.child)
+    case o => o.children.flatMap(nodes)
+  })
+
+  /** The write plan of `Extract.run` over 100 pages into an empty table. */
+  private lazy val freshWritePlan: SparkPlan = {
+    val dir = pagesDir(100)
+    val table = new graft.tables.SnapshotTable(Files.createTempDirectory("plan-table").toString)
+    writePlanOf(graft.pipeline.Extract.run(spark, spark.read.parquet(dir), table,
+      numSalts = 16, numPartitions = 4))
+  }
+
+  test("extraction scan prunes to (url, html) — the fat column plus key only") {
+    val plan = freshWritePlan.toString
     val readSchema = plan.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
     assert(readSchema.contains("url") && readSchema.contains("html"))
     assert(!readSchema.contains("warc_ts") && !readSchema.contains("lang"),
@@ -42,20 +90,15 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("flagship pipeline has exactly one exchange (the salted repartition)") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("plan-pages2").toString
-    spark.range(100).mapPartitions(_.map(i => graft.fixtures.PageGen.page(i, 42L)))
-      .write.mode("overwrite").parquet(dir)
-    val df = spark.read.parquet(dir)
-      .select(col("url"), col("html"))
-      .withColumn("salt", pmod(xxhash64(col("url")), lit(16)).cast("int"))
-      .repartition(4, col("salt"))
-      .select(col("url"), col("html"))
-      .as[graft.pipeline.Extract.PageSlim]
-      .mapPartitions(_.map(p => graft.kernel.ExtractKernel.extractOne(p.url, p.html, 0, 0)))
-      .toDF()
-    val exchanges = planOf(df).linesIterator.count(_.contains("Exchange"))
-    assert(exchanges === 1, s"expected exactly 1 exchange, plan:\n${planOf(df)}")
+    val plan = freshWritePlan.toString
+    val exchanges = plan.linesIterator.count(_.contains("Exchange"))
+    assert(exchanges === 1, s"expected exactly 1 exchange, plan:\n$plan")
+    // the kernel stage decodes rows into objects once and encodes its docs
+    // once: a second encoder round trip would show up as a second pair
+    val all = nodes(freshWritePlan)
+    assert(all.count(_.isInstanceOf[DeserializeToObjectExec]) === 1 &&
+      all.count(_.isInstanceOf[SerializeFromObjectExec]) === 1,
+      s"expected one DeserializeToObject and one SerializeFromObject:\n$plan")
   }
 
   test("filter pushdown reaches the parquet scan (PushedFilters)") {
@@ -96,10 +139,7 @@ class PlanShapeSpec extends AnyFunSuite {
       val pages = docs.select(
           concat(lit("doc://"), col("doc_id")).as("url"),
           encode(col("text"), "UTF-8").as("html"))
-        .as[graft.pipeline.Extract.PageSlim]
-      val extracted = pages.mapPartitions { it =>
-        it.map(p => graft.kernel.ExtractKernel.extractOne(p.url, p.html, 0, 0))
-      }.toDF()
+      val extracted = graft.pipeline.Extract.kernelPages(pages).toDF()
         .select(substring(col("url"), 7, 32).cast("long").as("doc_id"),
           col("extracted_text"))
       val gated =
@@ -221,45 +261,35 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("pipeline bloom resume: might_contain probe, fat column never crosses a shuffle") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("plan-pages3").toString
-    spark.range(200).mapPartitions(_.map(i => graft.fixtures.PageGen.page(i, 42L)))
-      .write.mode("overwrite").parquet(dir)
-    val tableDir = Files.createTempDirectory("plan-table").toString
-    val table = new graft.tables.SnapshotTable(tableDir)
-    graft.pipeline.Extract.run(spark, spark.read.parquet(dir), table,
-      numSalts = 4, numPartitions = 2)
-    // the exact resume dataflow Extract.run builds above the bloom threshold
-    val pages = spark.read.parquet(dir).select(col("url"), col("html"))
-    val resumed = graft.operators.BloomResume.bloomAntiJoin(
-      pages, table.doneUrls(spark).get, "url", table.chainRowTotal.get)
-    // pin the static plan (AQE off) so join strategies are decided here
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val plan = resumed.queryExecution.executedPlan
-      val s = plan.toString
-      assert(s.contains("might_contain"), s"bloom probe missing:\n$s")
-      val shuffles = plan.collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-      }
-      assert(shuffles.forall(e => !e.output.exists(_.name == "html")),
-        s"fat column crosses an exchange:\n$s")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val dir = pagesDir(200)
+    val table = new graft.tables.SnapshotTable(Files.createTempDirectory("plan-table").toString)
+    graft.pipeline.Extract.run(spark, spark.read.parquet(dir).filter(!col("url").endsWith("0")),
+      table, numSalts = 4, numPartitions = 2)
+    // the real resume pass, forced onto the Bloom-pruned anti-join, under
+    // adaptive and static planning: html crosses exactly one shuffle, the
+    // salted repartition, whichever join strategies get picked
+    for (aqe <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      try {
+        val plan = writePlanOf(graft.pipeline.Extract.run(spark, spark.read.parquet(dir),
+          table, numSalts = 4, numPartitions = 2, bloomResumeMinRows = 0))
+        val s = plan.toString
+        assert(s.contains("might_contain"), s"AQE $aqe: bloom probe missing:\n$s")
+        val fat = nodes(plan).collect { case e: ShuffleExchangeExec => e }.distinct
+          .filter(_.output.exists(_.name == "html"))
+        assert(fat.length === 1 && fat.head.outputPartitioning.toString.contains("salt"),
+          s"AQE $aqe: html crosses ${fat.length} shuffles:\n$s")
+      } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("resume: building the done set and retry counts runs no Spark job; " +
        "the real write plan scans the chain's successes once") {
     import spark.implicits._
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.util.QueryExecutionListener
     import graft.kernel.ExtractKernel.{ExtractedDoc, Lineage}
     val sc = spark.sparkContext
-    val dir = Files.createTempDirectory("plan-pages5").toString
-    spark.range(60).mapPartitions(_.map(i => graft.fixtures.PageGen.page(i, 42L)))
-      .write.mode("overwrite").parquet(dir)
-    val pages = spark.read.parquet(dir)
+    val pages = spark.read.parquet(pagesDir(60))
     val table = new graft.tables.SnapshotTable(Files.createTempDirectory("plan-table").toString)
     // a chain with successes (snapshot 0) and failures (snapshot 1), and
     // pages still pending for the pass under test
@@ -282,22 +312,8 @@ class PlanShapeSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(countJobs)
     assert(jobs.get === 0, "building the resume frames launched Spark jobs")
 
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val capture = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan match {
-          case a: AdaptiveSparkPlanExec => a.executedPlan.toString // the final plan
-          case p => p.toString
-        })
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(capture)
-    try {
-      graft.pipeline.Extract.run(spark, pages, table, numSalts = 4, numPartitions = 2)
-      org.apache.spark.graft.ListenerBusDrain(sc)
-    } finally spark.listenerManager.unregister(capture)
-    val write = plans.toArray(Array.empty[String])
-      .find(_.contains("InsertIntoHadoopFsRelationCommand")).getOrElse(fail("no write plan"))
+    val write = writePlanOf(
+      graft.pipeline.Extract.run(spark, pages, table, numSalts = 4, numPartitions = 2)).toString
     def scans(filter: String) =
       write.linesIterator.count(l => l.contains("FileScan") && l.contains(s"DataFilters: [$filter(error"))
     val successScans = scans("isnull")
@@ -306,6 +322,24 @@ class PlanShapeSpec extends AnyFunSuite {
     // counts; its exchange is reused, so the failed rows are scanned once too
     val failureScans = scans("isnotnull")
     assert(failureScans === 1, s"chain failures scanned $failureScans times:\n$write")
+  }
+
+  test("q_norm_dedup: the executed adaptive plan reuses the fp exchange") {
+    val df = SparkEntry.queries("q_norm_dedup")(spark, sf)
+    df.collect()
+    // both consumers of the fingerprints (the group aggregate and the join
+    // back) read one hash-partitioned-by-fp exchange; AQE decides the reuse
+    // at runtime, so the pin is on the final plan
+    val reused = nodes(df.queryExecution.executedPlan).collect {
+      case r: ReusedExchangeExec => r.child
+    }
+    assert(reused.exists {
+      case e: ShuffleExchangeExec => e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.exists(_.references.exists(_.name == "fp"))
+        case _ => false
+      }
+      case _ => false
+    }, s"no reused fp exchange:\n${df.queryExecution.executedPlan}")
   }
 
   test("aggregates use partial (map-side) aggregation") {
