@@ -1,7 +1,7 @@
 package graft
 
 import scala.util.{Failure, Success, Try}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
  * pair. Emits ONE JSON line.
  *
  * Fixed-pass protocol:
- *  - sweep: every query is timed once; a query that throws is listed under
- *    `queries_failed` and is neither a timing nor part of `value`;
+ *  - sweep: every query is timed once into the `noop` sink, which computes
+ *    every column; a query that throws is listed under `queries_failed`
+ *    and is neither a timing nor part of `value`;
  *  - extraction: one warm-up pass, then `TimedPasses` timed passes;
  *    `extract_docs_per_sec` is their median, and every pass is listed;
  *  - scaling: the pair `scalingPair` derives from the session's cpus, run
@@ -118,6 +119,10 @@ object Bench {
   def medianPass(passes: Seq[Pass]): Pass =
     passes.sortBy(_.docsPerSec).apply(passes.length / 2)
 
+  /** Runs `df` into the `noop` sink: every column is computed, where a
+    * `count()` lets the optimizer prune the columns nothing reads. */
+  def computeAll(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
   /** Wall seconds of `body`, or what it threw: a failed run is never a timing. */
   def timed(body: => Any): Try[Double] = {
     val t0 = System.nanoTime()
@@ -209,7 +214,7 @@ object Bench {
     catch { case _: Throwable => }
 
     val sweep = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t = timed(fn(spark, sfDir).count())
+      val t = timed(computeAll(fn(spark, sfDir)))
       t.failed.foreach(e => System.err.println(s"[bench] $name FAILED: $e"))
       name -> t
     }

@@ -9,14 +9,15 @@ import org.apache.spark.sql.SparkSession
  * Modes:
  *   runMain graft.BenchExtra plans <outDir> <suffix> [queryCsv]
  *     — write .explain("formatted") for each query to <outDir>/<name>_<suffix>.txt
- *   runMain graft.BenchExtra time <reps> [queryCsv]
- *     — time each query `reps` times with the exact Bench methodology
- *       (fn(spark, sfDir).count()), print min/median per query as JSON;
- *       a run that throws prints ERR and is left out of min and median
- *       (a query with no successful run is "ERR" and not in total_min).
  *   runMain graft.BenchExtra noop <reps> [queryCsv]
- *     — same but with the noop sink (guide §1.4: computes EVERY column),
- *       for isolating compute that .count() would let the optimizer prune.
+ *     — time each query `reps` times with the exact Bench methodology
+ *       (`Bench.computeAll`: the noop sink, which computes EVERY column),
+ *       print min/median per query as JSON; a run that throws prints ERR
+ *       and is left out of min and median (a query with no successful run
+ *       is "ERR" and not in total_min).
+ *   runMain graft.BenchExtra time <reps> [queryCsv]
+ *     — same but timing fn(spark, sfDir).count(), which lets the optimizer
+ *       prune unread columns (the sweep's subject before it moved to noop).
  *
  * Uses the same session shape as Bench.buildSession and the same
  * $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS contract.
@@ -66,8 +67,7 @@ object BenchExtra {
           spark.sparkContext.setJobDescription(name)
           val runs = (1 to reps).map { _ =>
             Bench.timed {
-              if (mode == "noop")
-                fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+              if (mode == "noop") Bench.computeAll(fn(spark, sfDir))
               else fn(spark, sfDir).count()
             }
           }

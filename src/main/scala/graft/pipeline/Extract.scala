@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
+import graft.functions.{ResumeFunctions, UrlFunctions}
 import graft.kernel.ExtractKernel
 import graft.kernel.ExtractKernel.ExtractedDoc
 import graft.tables.SnapshotTable
@@ -15,7 +16,7 @@ import graft.tables.SnapshotTable
  * /root/reference/src/orchestrator.py + app.py) as ONE Spark job:
  *
  *   scan pages (column-pruned to url+html, keyed on url_key)
- *     -> anti-join against committed output snapshot   (resume; S1/S2)
+ *     -> drop what the committed snapshots hold        (resume; S1/S2)
  *     -> salt on url_key + repartition + local sort     (skew defuse; §4.3)
  *     -> Extract.kernel                                 (the "container")
  *     -> append to SnapshotTable + atomic commit        (uploader/K1)
@@ -24,21 +25,24 @@ import graft.tables.SnapshotTable
  * extraction queries run it too, so every path extracts the same way.
  *
  * Explicit physical decisions (north_rule): the scan prunes to (url, html)
- * so the fat binary column is the only payload moved, and on a fresh table
- * the salted repartition is the only exchange. Resume adds exchanges of its
- * own: the per-url failure aggregate (read once; its exchange is shared by
- * the done set and the retry counts) and, once the done set outgrows
- * broadcast, the anti-join's — sort-merge shuffles the fat side too, which
- * is why a done set past `bloomResumeMinRows` takes the Bloom-pruned
- * anti-join that never exchanges it. The chain is read once, with a known
- * schema (`SnapshotTable.resumeInputs`). Partition count P and salt count S
- * are explicit inputs sized for ~128MB html per task at the target scale.
+ * so the fat binary column is the only payload moved, and the salted
+ * repartition is the only exchange of the write. Resume has two strategies,
+ * chosen by the chain's row count:
+ *  - the lookup (below `bloomResumeMinRows`): one job of one stage folds the
+ *    chain into a [[graft.tables.ResumeIndex]], and `resume_state(url_key)`
+ *    probes its broadcast in the scan projection — done rows are filtered
+ *    before the exchange and prior attempts ride along, with no join;
+ *  - the Bloom path (at or above it): the Bloom-pruned anti-join, which never
+ *    exchanges the fat side once the done set outgrows broadcast, plus a
+ *    retry left join and the per-url failure aggregate.
+ * Partition count P and salt count S are explicit inputs sized for ~128MB
+ * html per task at the target scale.
  */
 object Extract {
 
-  /** Done-set row count at which resume switches from plain left_anti to
-    * the Bloom-pruned exact anti-join: ~4M rows is past any sane broadcast
-    * threshold, while the bloom build itself stays trivial (8 MB cap). */
+  /** Chain row count at which resume switches from the in-scan lookup to
+    * the Bloom-pruned exact anti-join: ~4M rows keeps the broadcast index
+    * under ~48 MB, while the bloom build itself stays trivial (8 MB cap). */
   val DefaultBloomResumeMinRows: Long = 4L << 20
 
   final case class Metrics(version: Int, input: Long, extracted: Long,
@@ -81,8 +85,6 @@ object Extract {
           numSalts: Int = 256, numPartitions: Int = 0,
           maxRetries: Int = SnapshotTable.DefaultMaxRetries,
           bloomResumeMinRows: Long = DefaultBloomResumeMinRows): Metrics = {
-    import spark.implicits._
-
     val p = if (numPartitions > 0) numPartitions
             else spark.sparkContext.defaultParallelism
 
@@ -95,50 +97,45 @@ object Extract {
     // the normalization the reference's url-keyed queue lacks
     // (src/queue.py:24-33 keys raw strings).
     val pages = pagesDf.select(col("url"), col("html"))
-      .withColumn("url_key", graft.functions.UrlFunctions.urlKey(col("url")))
+      .withColumn("url_key", UrlFunctions.urlKey(col("url")))
 
     // Resume (S1/S2, the claim query the reference revolves around —
-    // src/queue.py:24-33). Two exact, row-identical strategies:
-    //  - done-set below `bloomResumeMinRows` (or unsized external chain):
-    //    plain left_anti — Catalyst/AQE broadcasts a small build side;
+    // src/queue.py:24-33). Two exact, row-identical strategies, chosen by
+    // the chain's row count (the manifests' total, or one count job on an
+    // externally built chain):
+    //  - below `bloomResumeMinRows`: a lookup. One job folds the chain into
+    //    a ResumeIndex (sorted url keys + states, 12 bytes per key); its
+    //    broadcast is probed by `resume_state(url_key)` in the scan
+    //    projection, and done rows are filtered out there, so the write
+    //    plan has no join and never reads the chain;
     //  - at/above it: Bloom-pruned exact anti-join — the fat (url, html)
     //    side is never exchanged, which is the shape a 100 TB done-set
-    //    needs (see operators/BloomResume.scala). The manifest row total
+    //    needs (see operators/BloomResume.scala). The row total
     //    upper-bounds distinct done urls, so the filter is never undersized
     //    by more than the retry fraction (fpp degrades, exactness doesn't).
-    val resume = table.resumeInputs(spark)
-    val notDone = resume match {
-      case Some(r) =>
-        val done = r.done(maxRetries)
-          .select(graft.functions.UrlFunctions.urlKey(col("url")).as("url_key"))
-        table.chainRowTotal match {
-          case Some(est) if est >= bloomResumeMinRows =>
-            graft.operators.BloomResume.bloomAntiJoin(pages, done, "url_key", est)
-          case _ => pages.join(done, Seq("url_key"), "left_anti")
-        }
-      case None => pages
+    //    Retry counts come from a left join against the per-key max.
+    table.chainRows(spark) match {
+      case Some(rows) if rows >= bloomResumeMinRows =>
+        extractPending(bloomResume(pages, table, rows, maxRetries), table, numSalts, p)
+      case _ => table.resumeIndex(spark, maxRetries) match {
+        case Some(ix) =>
+          val bc = spark.sparkContext.broadcast(ix)
+          val notDone = pages
+            .withColumn("prior_attempts", ResumeFunctions.resumeState(col("url_key"), bc))
+            .filter(col("prior_attempts") >= 0)
+          try extractPending(notDone, table, numSalts, p) finally bc.destroy()
+        case None => // an empty table
+          extractPending(pages.withColumn("prior_attempts", lit(0)), table, numSalts, p)
+      }
     }
-    // attach prior attempt counts for re-driven failures. The set is small
-    // by construction (failed-but-retryable urls only) so Catalyst/AQE will
-    // normally broadcast it — but the hint is NOT forced: a pathological
-    // all-failing corpus must degrade to a shuffle join, not OOM the driver.
-    // A retryable url that later succeeded needs no anti-join here: its key
-    // is in the done set, so no pending row can pick its count up.
-    val pending = resume.flatMap(_.retryable(maxRetries)) match {
-      case Some(att) =>
-        // pre-aggregate to ONE row per url_key (max attempts across url
-        // spellings that canonicalize together): the left join then cannot
-        // fan a page row out, and the surviving retry count is
-        // deterministic rather than sort-tie-order-dependent
-        val attKeyed = att.select(
-            graft.functions.UrlFunctions.urlKey(col("url")).as("url_key"),
-            col("prior_attempts"))
-          .groupBy(col("url_key"))
-          .agg(max(col("prior_attempts")).as("prior_attempts"))
-        notDone.join(attKeyed, Seq("url_key"), "left")
-          .withColumn("prior_attempts", coalesce(col("prior_attempts"), lit(0)))
-      case None => notDone.withColumn("prior_attempts", lit(0))
-    }
+  }
+
+  /** Salt, collapse variants, extract, write and commit the pending rows
+    * (url, html, url_key, prior_attempts) as the table's next snapshot. */
+  private def extractPending(pending: DataFrame, table: SnapshotTable, numSalts: Int,
+                             p: Int): Metrics = {
+    val spark = pending.sparkSession
+    import spark.implicits._
 
     val bytesIn: LongAccumulator = spark.sparkContext.longAccumulator("graft.bytesIn")
     // per-partition lineage (K5 analog of the reference's per-job processor
@@ -217,6 +214,38 @@ object Extract {
     }
     table.commitManifest(version, snapDir, metrics, lineage = lineageRows)
     Metrics(version, written, ok, written - ok, bytesIn.value)
+  }
+
+  /** The Bloom resume path: pages whose key the chain has not done, with
+    * their prior attempts (0 when the key never failed). */
+  private def bloomResume(pages: DataFrame, table: SnapshotTable, chainRows: Long,
+                          maxRetries: Int): DataFrame = {
+    val spark = pages.sparkSession
+    table.resumeInputs(spark) match {
+      case None => pages.withColumn("prior_attempts", lit(0))
+      case Some(r) =>
+        val done = r.done(maxRetries).select(UrlFunctions.urlKey(col("url")).as("url_key"))
+        val notDone = graft.operators.BloomResume.bloomAntiJoin(pages, done, "url_key", chainRows)
+        // The retryable set is small by construction (failed-but-retryable
+        // urls only) so Catalyst/AQE will normally broadcast it — but the
+        // hint is NOT forced: a pathological all-failing corpus must degrade
+        // to a shuffle join, not OOM the driver. A retryable url that later
+        // succeeded needs no anti-join here: its key is in the done set, so
+        // no pending row can pick its count up.
+        r.retryable(maxRetries) match {
+          case Some(att) =>
+            // ONE row per url_key (max attempts across url spellings that
+            // canonicalize together): the left join cannot fan a page row
+            // out, and the surviving count is deterministic
+            val attKeyed = att.select(UrlFunctions.urlKey(col("url")).as("url_key"),
+                col("prior_attempts"))
+              .groupBy(col("url_key"))
+              .agg(max(col("prior_attempts")).as("prior_attempts"))
+            notDone.join(attKeyed, Seq("url_key"), "left")
+              .withColumn("prior_attempts", coalesce(col("prior_attempts"), lit(0)))
+          case None => notDone.withColumn("prior_attempts", lit(0))
+        }
+    }
   }
 
   /** A1-style status rollup over the output table (src/queue.py:80-96),

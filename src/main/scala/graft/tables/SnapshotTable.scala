@@ -24,12 +24,17 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
  * snapshot intact and the partial data dir unreferenced.
  *
  * Readers see the union of the snapshot chain (each snapshot appends data
- * files). Resume reads the chain once: `resumeInputs` is one parquet read
- * of the (url, error) columns with that schema given (no schema-inference
- * job), split into the success urls and one per-url failure aggregate over
- * the failed rows. `doneUrls` (successes plus terminal failures, the
- * left-anti side of incremental resume) and `retryAttempts` (the re-drive
- * set) are both built from it.
+ * files). Resume reads the chain's (url, error) columns once, with that
+ * schema given (no schema-inference job), in one of two forms:
+ *  - `resumeIndex`: the chain folded by one Spark job into a
+ *    [[ResumeIndex]] on the driver — a sorted `long[]` of url keys plus an
+ *    `int[]` of states, 12 bytes per key, so at most about 48 MB at the
+ *    4M-row default of `Extract.DefaultBloomResumeMinRows`, past which
+ *    resume takes the Bloom path instead;
+ *  - `resumeInputs`: DataFrames of the success urls and one per-url
+ *    failure aggregate over the failed rows, which the Bloom path joins.
+ *    `doneUrls` (successes plus terminal failures, the left-anti side) and
+ *    `retryAttempts` (the re-drive set) are both built from it.
  */
 object SnapshotTable {
   /** Reference default: src/settings.py:49 MAX_RETRIES = 3. */
@@ -148,6 +153,41 @@ final class SnapshotTable(dirStr: String) {
   def retryAttempts(spark: SparkSession, maxRetries: Int = DefaultMaxRetries): Option[DataFrame] =
     resumeInputs(spark).flatMap(r =>
       r.retryable(maxRetries).map(_.join(r.ok, Seq("url"), "left_anti")))
+
+  /** Rows across the chain: the manifests' total, or, when a manifest lacks
+    * it (an externally built chain), one count job over the data files.
+    * None when the chain is empty. */
+  def chainRows(spark: SparkSession): Option[Long] = {
+    val dirs = visibleDataDirs
+    if (dirs.isEmpty) None
+    else chainRowTotal.orElse(Some(
+      spark.read.schema(SnapshotTable.ResumeSchema).parquet(dirs: _*).count()))
+  }
+
+  /** The chain's resume state per url key as a [[ResumeIndex]], from ONE
+    * Spark job of one stage: the scan of (url, error) with that schema
+    * given projects (url_key, error IS NULL, url of a failed row), each
+    * task folds its rows into arrays, and the driver merges them. No
+    * exchange, and no row per chain row reaches the driver. Its states
+    * equal the [[SnapshotTable.ResumeInputs]] definition: `done` keyed with
+    * url_key, and `retryable` with the max count per key. None when the
+    * chain is empty. */
+  def resumeIndex(spark: SparkSession, maxRetries: Int = DefaultMaxRetries): Option[ResumeIndex] = {
+    import org.apache.spark.sql.functions._
+    val dirs = visibleDataDirs
+    if (dirs.isEmpty) None
+    else {
+      val t = spark.read.schema(SnapshotTable.ResumeSchema).parquet(dirs: _*)
+      val key = graft.functions.UrlFunctions.urlKey(col("url"))
+      // with no failures on record every row counts as done, as in resumeInputs
+      val rows =
+        if (chainFailedTotal.contains(0L)) t.select(key, lit(true), lit(null).cast("string"))
+        else t.select(key, col("error").isNull, when(col("error").isNotNull, col("url")))
+      val folds = rows.queryExecution.toRdd
+        .mapPartitions(it => Iterator.single(ResumeIndex.fold(it))).collect()
+      Some(ResumeIndex.merge(folds.toSeq, maxRetries))
+    }
+  }
 
   /** The chain's resume inputs, from ONE parquet read of its (url, error)
     * columns with that schema given, so building them runs no

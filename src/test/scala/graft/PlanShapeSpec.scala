@@ -16,8 +16,9 @@ import java.nio.file.Files
   * only where intended, whole-stage codegen on the SQL surface). The
   * flagship pins run the real `Extract.run` and assert on the write plan it
   * executed: on a fresh table exactly one exchange (the salted repartition)
-  * and one encoder round trip through `Extract.kernel`; on resume, html
-  * still crosses only that exchange. */
+  * and one encoder round trip through `Extract.kernel`; on a lookup resume
+  * no join and no chain scan; on a Bloom resume, html still crosses only
+  * that exchange. */
 class PlanShapeSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSession.builder()
@@ -44,7 +45,12 @@ class PlanShapeSpec extends AnyFunSuite {
 
   /** The final plan of the parquet write that `body` runs (the adaptive
     * plan's final form when AQE is on). */
-  private def writePlanOf(body: => Unit): SparkPlan = {
+  private def writePlanOf(body: => Unit): SparkPlan =
+    plansOf(body).find(_.toString.contains("InsertIntoHadoopFsRelationCommand"))
+      .getOrElse(fail("no write plan"))
+
+  /** The final plans of the queries that `body` runs. */
+  private def plansOf(body: => Unit): Seq[SparkPlan] = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
     val capture = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
@@ -59,9 +65,7 @@ class PlanShapeSpec extends AnyFunSuite {
       body
       org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
     } finally spark.listenerManager.unregister(capture)
-    plans.toArray(Array.empty[SparkPlan])
-      .find(_.toString.contains("InsertIntoHadoopFsRelationCommand"))
-      .getOrElse(fail("no write plan"))
+    plans.toArray(Array.empty[SparkPlan]).toSeq
   }
 
   /** Every node of `p`, looking through adaptive plans, query stages and
@@ -116,8 +120,8 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("resume anti-join on unbounded done-set does NOT force broadcast in the pipeline") {
-    // Extract.run leaves strategy choice to Catalyst/AQE; assert the plan is
-    // an anti join of either flavor and the query compiles + runs
+    // the Bloom resume path leaves join strategy choice to Catalyst/AQE;
+    // assert the plan is an anti join of either flavor and the query compiles
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val done = docs.filter(col("doc_id") % 2 === 0).select("doc_id")
     val anti = docs.join(done, Seq("doc_id"), "left_anti")
@@ -284,9 +288,11 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("resume: building the done set and retry counts runs no Spark job; " +
-       "the real write plan scans the chain's successes once") {
+       "the real lookup pass reads the chain in one job of one stage and writes with no join") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     import graft.kernel.ExtractKernel.{ExtractedDoc, Lineage}
     val sc = spark.sparkContext
     val pages = spark.read.parquet(pagesDir(60))
@@ -299,29 +305,61 @@ class PlanShapeSpec extends AnyFunSuite {
     val failed = rest.take(3).toSeq.map(u => ExtractedDoc(u, "html", null, null, null,
       Array.empty, 0.5, 0L, "boom", Lineage(0, 0, "error")))
     table.commit(failed.toDS().toDF(), Map("input" -> 3L, "extracted" -> 0L, "failed" -> 3L))
+    val chainDirs = table.visibleDataDirs
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val countJobs = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    org.apache.spark.graft.ListenerBusDrain(sc)
-    sc.addSparkListener(countJobs)
-    try {
-      assert(table.doneUrls(spark).nonEmpty && table.retryAttempts(spark).nonEmpty)
+    // jobs, completed stages and shuffle-writing stages that `body` runs
+    def stagesOf(body: => Unit): (Int, Int, Int) = {
+      val jobs, stages, shuffles = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+          stages.incrementAndGet()
+          if (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0) shuffles.incrementAndGet()
+        }
+      }
       org.apache.spark.graft.ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(countJobs)
-    assert(jobs.get === 0, "building the resume frames launched Spark jobs")
+      sc.addSparkListener(listener)
+      try {
+        body
+        org.apache.spark.graft.ListenerBusDrain(sc)
+      } finally sc.removeSparkListener(listener)
+      (jobs.get, stages.get, shuffles.get)
+    }
 
-    val write = writePlanOf(
-      graft.pipeline.Extract.run(spark, pages, table, numSalts = 4, numPartitions = 2)).toString
-    def scans(filter: String) =
-      write.linesIterator.count(l => l.contains("FileScan") && l.contains(s"DataFilters: [$filter(error"))
-    val successScans = scans("isnull")
-    assert(successScans === 1, s"chain successes scanned $successScans times:\n$write")
-    // the per-url failure aggregate feeds both the done set and the retry
-    // counts; its exchange is reused, so the failed rows are scanned once too
-    val failureScans = scans("isnotnull")
-    assert(failureScans === 1, s"chain failures scanned $failureScans times:\n$write")
+    val (frameJobs, _, _) = stagesOf(
+      assert(table.doneUrls(spark).nonEmpty && table.retryAttempts(spark).nonEmpty))
+    assert(frameJobs === 0, "building the resume frames launched Spark jobs")
+
+    // the same pass into an empty table, then the resume pass under test
+    val empty = new graft.tables.SnapshotTable(Files.createTempDirectory("plan-table").toString)
+    val fresh = stagesOf(graft.pipeline.Extract.run(spark, pages, empty,
+      numSalts = 4, numPartitions = 2))
+    var plans = Seq.empty[SparkPlan]
+    val resumed = stagesOf {
+      plans = plansOf(graft.pipeline.Extract.run(spark, pages, table,
+        numSalts = 4, numPartitions = 2))
+    }
+    // what resume adds to the pass: one job of one stage, with no shuffle,
+    // and no SQL plan of the pass scans a chain directory
+    assert((resumed._1 - fresh._1, resumed._2 - fresh._2, resumed._3 - fresh._3) === ((1, 1, 0)),
+      s"resume pass ran (jobs, stages, shuffle stages) $resumed, a fresh pass $fresh")
+    val chainScans = plans.flatMap(nodes).collect { case f: FileSourceScanExec => f }
+      .filter(_.relation.location.rootPaths.map(_.toUri.getPath).exists(p =>
+        chainDirs.exists(d => p == d || p.startsWith(d + "/"))))
+    assert(chainScans.isEmpty, s"the pass scans the chain:\n${chainScans.mkString("\n")}")
+
+    val write = plans.find(_.toString.contains("InsertIntoHadoopFsRelationCommand"))
+      .getOrElse(fail("no write plan"))
+    val all = nodes(write)
+    assert(!all.exists(n => n.isInstanceOf[BaseJoinExec] || n.nodeName.contains("Join")),
+      s"the resume write plan joins:\n$write")
+    // resume_state runs in the scan stage, below the one (salted) exchange
+    val exchanges = all.collect { case e: ShuffleExchangeExec => e }.distinct
+    assert(exchanges.length === 1 && exchanges.head.outputPartitioning.toString.contains("salt"),
+      s"expected only the salted exchange:\n$write")
+    assert(nodes(exchanges.head.child).exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[graft.functions.ResumeState]))),
+      s"resume_state is not below the salted exchange:\n$write")
   }
 
   test("q_norm_dedup: the executed adaptive plan reuses the fp exchange") {

@@ -22,10 +22,13 @@ class ExtractPipelineSpec extends AnyFunSuite {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  // Both resume strategies must be row-identical end-to-end: plain left_anti
-  // (bloomMin = MaxValue can never trigger) and the Bloom-pruned exact
-  // anti-join (bloomMin = 0 forces it whenever a chain exists).
-  for ((label, bloomMin) <- Seq("plain-anti" -> Long.MaxValue, "forced-bloom" -> 0L))
+  // Both resume strategies must be row-identical end-to-end: the in-scan
+  // lookup (bloomMin = MaxValue can never trigger the Bloom path) and the
+  // Bloom-pruned exact anti-join (bloomMin = 0 forces it whenever a chain
+  // exists).
+  private val strategies = Seq("lookup" -> Long.MaxValue, "forced-bloom" -> 0L)
+
+  for ((label, bloomMin) <- strategies)
   test(s"extract 500 pages, commit, resume no-op, incremental append [$label]") {
     import spark.implicits._
     val pagesDir = tmp("pages")
@@ -73,7 +76,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
     assert(mf.metrics("bytes_in") > 0)
   }
 
-  for ((label, bloomMin) <- Seq("plain-anti" -> Long.MaxValue, "forced-bloom" -> 0L))
+  for ((label, bloomMin) <- strategies)
   test(s"failed rows re-driven with incremented attempt, terminal at maxRetries [$label]") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -122,7 +125,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
     assert(post.getOrElse("done", 0L) + post.getOrElse("done_empty", 0L) === 19)
   }
 
-  for ((label, bloomMin) <- Seq("plain-anti" -> Long.MaxValue, "forced-bloom" -> 0L))
+  for ((label, bloomMin) <- strategies)
   test(s"resume over url spellings: max attempts per key, terminal or success spelling is done [$label]") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -157,6 +160,34 @@ class ExtractPipelineSpec extends AnyFunSuite {
       .select(col("url"), col("lineage.attempt")).as[(String, Int)].collect().toMap
     // key a re-driven once, from its smallest spelling, with the larger count
     assert(written === Map(a1 -> 2, fresh -> 0), s"$written")
+  }
+
+  for ((label, bloomMin) <- strategies)
+  test(s"externally built chain without an input metric: sized by a count, resumes exactly [$label]") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.kernel.ExtractKernel.{ExtractedDoc, Lineage}
+    val table = new SnapshotTable(tmp("table6"))
+    val (okUrl, retryUrl, deadUrl, fresh) =
+      ("https://s.org/ok", "https://s.org/retry", "https://s.org/dead", "https://s.org/new")
+    def failed(u: String, att: Int) = ExtractedDoc(u, "html", null, null, null,
+      Array.empty, 0.5, 0L, "transient: simulated", Lineage(0, att, "error"))
+    val chain = Seq(ExtractedDoc(okUrl, "html", "ok text", null, null, Array.empty, 0.5, 7L,
+        null, Lineage(0, 0, "t")),
+      failed(retryUrl, 0), failed(deadUrl, 0), failed(deadUrl, 1), failed(deadUrl, 2))
+    // no "input" (nor "failed") in the manifest: the chain's size is unknown
+    table.commit(chain.toDS().toDF(), Map.empty)
+    assert(table.chainRowTotal.isEmpty)
+
+    val body = s"<html><body><p>${"page body words " * 10}</p></body></html>"
+    val pages = Seq(okUrl, retryUrl, deadUrl, fresh)
+      .map(u => (u, body.getBytes(java.nio.charset.StandardCharsets.UTF_8))).toDF("url", "html")
+    val m = Extract.run(spark, pages, table, numSalts = 4, numPartitions = 2,
+      bloomResumeMinRows = bloomMin)
+    assert(m.input === 2, s"only the retryable and the fresh url are pending: ${m.input}")
+    val written = table.read(spark).filter(col("error").isNull && col("url") =!= okUrl)
+      .select(col("url"), col("lineage.attempt")).as[(String, Int)].collect().toMap
+    assert(written === Map(retryUrl -> 1, fresh -> 0), s"$written")
   }
 
   test("canonical url keys: case/port/fragment/param-order variants collapse to one extraction") {
