@@ -2,13 +2,13 @@ package graft
 
 import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /**
  * Driver-run benchmark: times every SparkEntry query at the configured SF,
- * plus the extraction throughput (docs/sec) of the `extractThroughput`
- * stand-in on a deterministic synthesized corpus, plus one N-vs-4N scaling
- * pair. Emits ONE JSON line.
+ * plus the extraction throughput (docs/sec) of `Extract.plan` — the
+ * shipped pipeline up to its write, with no table to resume against — on
+ * a deterministic synthesized corpus, plus one N-vs-4N scaling pair.
+ * Emits ONE JSON line.
  *
  * Fixed-pass protocol:
  *  - sweep: every query is timed once into the `noop` sink, which computes
@@ -81,19 +81,17 @@ object Bench {
     dir
   }
 
-  /** Extraction pages/sec at the session's parallelism over `rows` pages. */
+  /** Extraction docs/sec at the session's parallelism over `rows` pages:
+    * `Extract.plan` with no table, every column computed into the `noop`
+    * sink; the docs are those the kernel extracted. */
   def extractThroughput(spark: SparkSession, rows: Long, partitions: Int): (Double, Long) = {
-    val dir = materializeCorpus(spark, rows)
-    val pages = spark.read.parquet(dir).select(col("url"), col("html"))
+    import scala.jdk.CollectionConverters._
+    val pages = spark.read.parquet(materializeCorpus(spark, rows))
     val t0 = System.nanoTime()
-    val salted = pages
-      .withColumn("salt", pmod(xxhash64(col("url")), lit(256)).cast("int"))
-      .repartition(partitions, col("salt"))
-    val n = graft.pipeline.Extract.kernelPages(salted)
-      .toDF() // stay in InternalRow: filter/count without re-deserializing
-      .filter(col("error").isNull)
-      .count()
+    val planned = graft.pipeline.Extract.plan(spark, pages, numPartitions = partitions)
+    computeAll(planned.docs.toDF())
     val sec = (System.nanoTime() - t0) / 1e9
+    val n = planned.partStats.value.asScala.map(_._2).sum
     (n / sec, n)
   }
 

@@ -34,7 +34,10 @@ object SparkEntry {
     * of splits never repartitions and the exchange only exists where the
     * layout starves the cluster. Round-robin placement cannot change any
     * result here: every consumer aggregates, joins or windows with its own
-    * keyed exchange downstream. */
+    * keyed exchange downstream. Measured on its five callers (`BenchExtra
+    * noop 5`, sum of per-query minima, 4 cores, two runs a side): at sf0.1
+    * 5.94 and 5.52 s with the fan, 7.32 and 6.84 s without; at sf0.01 it
+    * loses, 4.37 and 4.06 s against 3.44 and 3.72 s (BENCH.md). */
   private def tblFan(s: SparkSession, dir: String, name: String): DataFrame = {
     val df = tbl(s, dir, name)
     val bytes = scanBytes(new java.io.File(s"$dir/$name.parquet"))
@@ -97,8 +100,8 @@ object SparkEntry {
     outDir
   }
 
-  /** Flagship: the full extraction pipeline (scan -> salt/repartition ->
-    * Extract.kernel) over a deterministic 1k-page synthesized corpus
+  /** Flagship: the extraction pipeline (`Extract.plan` with no table) over
+    * a deterministic 1k-page synthesized corpus in 8 partitions
     * (BASELINE.json: "synthesise it deterministically at small scale").
     * Driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
@@ -106,10 +109,8 @@ object SparkEntry {
     val pages = spark.range(1000)
       .mapPartitions(_.map(i => graft.fixtures.PageGen.page(i, 42L)))
       .toDF()
-    val salted = pages
-      .withColumn("salt", pmod(xxhash64(col("url")), lit(64)).cast("int"))
-      .repartition(8, col("salt"))
-    Extract.kernelPages(salted).toDF().select("url", "doc_type", "n_chars", "quality")
+    Extract.plan(spark, pages, numPartitions = 8).docs.toDF()
+      .select("url", "doc_type", "n_chars", "quality")
   }
 
   // O4 quality-count helpers (ASCII approximation shared verbatim with the
@@ -1022,15 +1023,14 @@ object SparkEntry {
     // text_md5/n_chars computed INDEPENDENTLY from the CPython goldens for
     // html/other rows (tools/gen_extract_fixture.py cross-checks and
     // refuses to freeze on drift); pdf rows + n_spans are engine pins
-    // (PdfSpec/GoldenCorpusSpec carry their byte-level evidence).
+    // (PdfSpec/GoldenCorpusSpec carry their byte-level evidence). The
+    // PageGen urls are distinct canonical keys, so `Extract.plan` collapses
+    // no variant here.
     "q_extract_pipeline" -> ((s, dir) => {
       import s.implicits._
       val pages = s.range(2000)
         .mapPartitions(_.map(i => graft.fixtures.PageGen.page(i, 42L))).toDF()
-      val salted = pages
-        .withColumn("salt", pmod(xxhash64(col("url")), lit(64)).cast("int"))
-        .repartition(col("salt"))
-      Extract.kernelPages(salted).toDF()
+      Extract.plan(s, pages).docs.toDF()
         .select(col("url"), col("doc_type"),
           md5(coalesce(col("extracted_text"), lit(""))).as("text_md5"),
           col("n_chars"), size(col("spans")).cast("long").as("n_spans"))

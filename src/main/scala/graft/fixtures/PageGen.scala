@@ -2,6 +2,8 @@ package graft.fixtures
 
 import java.nio.charset.StandardCharsets
 
+import graft.SplitMix64
+
 /**
  * Deterministic Common-Crawl-style page corpus (FIXTURES.md §A): pure
  * function of (rowIndex, seed) — no wall-clock, no shared RNG — so any
@@ -21,21 +23,6 @@ object PageGen {
   final case class Page(url: String, warc_ts: java.sql.Timestamp,
                         html: Array[Byte], text: String, lang: String)
 
-  // ---------------------------------------------------------------- rng
-  /** splitmix64: independent stream per (seed,row). */
-  private final class Rng(seed0: Long) {
-    private var x = seed0
-    def nextLong(): Long = {
-      x += 0x9E3779B97F4A7C15L
-      var z = x
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^ (z >>> 31)
-    }
-    def nextInt(bound: Int): Int = (Math.floorMod(nextLong(), bound.toLong)).toInt
-    def nextDouble(): Double = (nextLong() >>> 11) * 1.1102230246251565e-16
-  }
-
   private val Hosts: IndexedSeq[String] = (0 until 64).map(i => s"host$i.example.org")
   // Zipf s=1.2 cumulative weights, precomputed once
   private val zipfCum: Array[Double] = {
@@ -43,7 +30,7 @@ object PageGen {
     val total = w.sum
     w.scanLeft(0.0)(_ + _).tail.map(_ / total)
   }
-  private def zipfHost(r: Rng): String = {
+  private def zipfHost(r: SplitMix64): String = {
     val u = r.nextDouble()
     var i = 0
     while (i < 63 && zipfCum(i) < u) i += 1
@@ -57,10 +44,10 @@ object PageGen {
       "article paragraph heading system engine spark partition shuffle " +
       "kernel stream snapshot commit resume golden byte exact").split(' ').toIndexedSeq
 
-  private def sentence(r: Rng, words: Int): String =
+  private def sentence(r: SplitMix64, words: Int): String =
     (0 until words).map(_ => Vocab(r.nextInt(Vocab.length))).mkString(" ")
 
-  private def paragraph(r: Rng): String = {
+  private def paragraph(r: SplitMix64): String = {
     val sents = 2 + r.nextInt(4)
     (0 until sents).map { _ =>
       val s = sentence(r, 8 + r.nextInt(12))
@@ -71,7 +58,7 @@ object PageGen {
   private val Langs = IndexedSeq("en", "de", "es", "zh", "")
 
   // ---------------------------------------------------------------- payloads
-  private def htmlPage(r: Rng, edge: Boolean): String = {
+  private def htmlPage(r: SplitMix64, edge: Boolean): String = {
     val title = sentence(r, 3 + r.nextInt(3))
     val nParas = 2 + r.nextInt(5)
     val paras = (0 until nParas).map(_ => paragraph(r))
@@ -107,7 +94,7 @@ object PageGen {
        |</body></html>""".stripMargin
   }
 
-  private def pdfPayload(r: Rng): Array[Byte] = {
+  private def pdfPayload(r: SplitMix64): Array[Byte] = {
     val nPages = 1 + r.nextInt(8)
     val pages = (0 until nPages).map { p =>
       if (r.nextInt(5) == 0) Seq.empty[String] // blank page
@@ -116,7 +103,7 @@ object PageGen {
     MiniPdf.build(pages, compress = r.nextInt(4) != 0, useTJ = r.nextInt(3) == 0)
   }
 
-  private def junkPayload(r: Rng): Array[Byte] = {
+  private def junkPayload(r: SplitMix64): Array[Byte] = {
     r.nextInt(5) match {
       case 0 => // printable ratio right at the 0.99 gate
         val base = ("x " * 300).getBytes(StandardCharsets.UTF_8) // 600 chars
@@ -141,14 +128,14 @@ object PageGen {
     }
   }
 
-  private def binaryJunk(r: Rng): Array[Byte] =
+  private def binaryJunk(r: SplitMix64): Array[Byte] =
     Array.fill(64 + r.nextInt(4096))(r.nextLong().toByte)
 
   // ---------------------------------------------------------------- rows
   private val BaseEpochMs = 1577836800000L // 2020-01-01T00:00:00Z
 
   def page(i: Long, seed: Long = 42L): Page = {
-    val r = new Rng(seed * 0x9E3779B97F4A7C15L + i * 0xC2B2AE3D27D4EB4FL + 0x165667B19E3779F9L)
+    val r = new SplitMix64(seed * 0x9E3779B97F4A7C15L + i * 0xC2B2AE3D27D4EB4FL + 0x165667B19E3779F9L)
     val host = zipfHost(r)
     val url = s"https://$host/doc/${seed}/${i}"
     val ts = new java.sql.Timestamp(BaseEpochMs + i * 1000L)

@@ -122,44 +122,6 @@ object QualityScore {
 
   private val StripChars: Set[Char] = ".,;:!?()[]{}\"'-".toSet
 
-  /** Python `str.strip(chars)` — remove leading/trailing chars in set. */
-  def stripChars(s: String, chars: Set[Char]): String = {
-    var i = 0
-    var j = s.length
-    while (i < j && chars.contains(s.charAt(i))) i += 1
-    while (j > i && chars.contains(s.charAt(j - 1))) j -= 1
-    s.substring(i, j)
-  }
-
-  /** Python `str.isalpha()` — nonempty, all code points category L*. */
-  def pyIsAlpha(s: String): Boolean = {
-    if (s.isEmpty) return false
-    var i = 0
-    while (i < s.length) {
-      val cp = s.codePointAt(i)
-      if (!Character.isLetter(cp)) return false
-      i += Character.charCount(cp)
-    }
-    true
-  }
-
-  /** Python `text.lower().split()` — lowercase, split on pyIsSpace runs. */
-  def pySplitLower(text: String): Seq[String] = {
-    val lowered = text.toLowerCase(java.util.Locale.ROOT)
-    val out = Seq.newBuilder[String]
-    val sb = new java.lang.StringBuilder
-    var i = 0
-    while (i < lowered.length) {
-      val cp = lowered.codePointAt(i)
-      if (pyIsSpace(cp)) {
-        if (sb.length > 0) { out += sb.toString; sb.setLength(0) }
-      } else sb.appendCodePoint(cp)
-      i += Character.charCount(cp)
-    }
-    if (sb.length > 0) out += sb.toString
-    out.result()
-  }
-
   /** Bundled common-word list (en+de), loaded once per JVM (the reference's
     * "load model once per process" idiom, src/ocr_watcher.py:60-65). */
   lazy val defaultWordlist: Set[String] = {

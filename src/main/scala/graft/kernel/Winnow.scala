@@ -11,6 +11,9 @@ package graft.kernel
  * MinHash sketches both lack.
  */
 object Winnow {
+  // each k-gram hash goes through the SplitMix64 finalizer: the raw
+  // polynomial hash is too structured for min-selection to be uniform
+  import graft.SplitMix64.mix
 
   private val Base = 0x100000001B3L // FNV prime as the rolling base
 
@@ -33,15 +36,6 @@ object Winnow {
       i += 1
     }
     out
-  }
-
-  /** splitmix-style finalizer: the raw polynomial hash is too structured
-    * for min-selection to be uniform. */
-  @inline private def mix(x0: Long): Long = {
-    var z = x0 + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
   }
 
   /**

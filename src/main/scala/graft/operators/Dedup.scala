@@ -25,17 +25,10 @@ object Dedup {
   // --------------------------------------------------------------- minhash
   /** Multiply-shift permutations over a 64-bit base hash; constants from
     * splitmix64(seed) so signatures are stable across runs/executors. */
-  private def permConstants(numPerms: Int, seed: Long): (Array[Long], Array[Long]) = {
-    var x = seed
-    def next(): Long = {
-      x += 0x9E3779B97F4A7C15L
-      var z = x
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^ (z >>> 31)
-    }
-    val a = Array.fill(numPerms)(next() | 1L) // odd multipliers
-    val b = Array.fill(numPerms)(next())
+  private[graft] def permConstants(numPerms: Int, seed: Long): (Array[Long], Array[Long]) = {
+    val r = new graft.SplitMix64(seed)
+    val a = Array.fill(numPerms)(r.nextLong() | 1L) // odd multipliers
+    val b = Array.fill(numPerms)(r.nextLong())
     (a, b)
   }
 

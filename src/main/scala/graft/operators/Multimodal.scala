@@ -405,21 +405,6 @@ object Multimodal {
     * (pass-size math out of scope; rare in the wild). */
   def decodePng(bytes: Array[Byte]): MediaMeta = decodePngPixels(bytes)._1
 
-  /** First defiltered scanline's byte sum — the pixel-derived stat an
-    * external oracle recomputes from the original (pre-filter) pixels,
-    * proving the defilter actually reconstructs them. -1 when invalid. */
-  def pngRow0Sum(bytes: Array[Byte]): Long = {
-    val (meta, px) = decodePngPixels(bytes)
-    if (px == null || meta.height <= 0) -1L
-    else {
-      val rowBytes = px.length / meta.height
-      var s = 0L
-      var i = 0
-      while (i < rowBytes) { s += px(i) & 0xFF; i += 1 }
-      s
-    }
-  }
-
   /** decodePng plus the fully DEFILTERED pixel bytes (scanlines
     * concatenated, filter bytes removed); pixels are null — and the meta
     * invalid — when the stream is corrupt, lying, or uses a filter byte
@@ -679,17 +664,10 @@ object Multimodal {
 
   /** Deterministic fixture media table generator (all real formats). */
   def mediaRow(i: Long, seed: Long = 42L): (Long, Array[Byte]) = {
-    var x = seed * 0x9E3779B97F4A7C15L + i * 0xC2B2AE3D27D4EB4FL
-    def next(): Long = {
-      x += 0x9E3779B97F4A7C15L
-      var z = x
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^ (z >>> 31)
-    }
-    def nextInt(b: Int): Int = Math.floorMod(next(), b.toLong).toInt
+    val r = new graft.SplitMix64(seed * 0x9E3779B97F4A7C15L + i * 0xC2B2AE3D27D4EB4FL)
+    import r.nextInt
     val t = nextInt(4) // 3 => corrupt blob
-    val payload = Array.fill(64 + nextInt(512))(next().toByte)
+    val payload = Array.fill(64 + nextInt(512))(r.nextLong().toByte)
     val blob = t match {
       case 0 => encodeBmp(4 + nextInt(60), 4 + nextInt(60), payload)
       case 1 => encodeWav(1 + nextInt(2), 8000, 8 * (1 + nextInt(500)), payload)

@@ -181,15 +181,8 @@ object Similarity {
 
   /** Deterministic random hyperplanes (splitmix64 gaussians via CLT-sum). */
   def hyperplanes(bits: Int, dim: Int, seed: Long): Array[Array[Float]] = {
-    var x = seed
-    def next(): Long = {
-      x += 0x9E3779B97F4A7C15L
-      var z = x
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^ (z >>> 31)
-    }
-    def unit(): Double = ((next() >>> 11) * 1.1102230246251565e-16) - 0.5
+    val r = new graft.SplitMix64(seed)
+    def unit(): Double = r.nextDouble() - 0.5
     Array.fill(bits)(Array.fill(dim)((unit() + unit() + unit() + unit()).toFloat))
   }
 

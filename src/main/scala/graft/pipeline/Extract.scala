@@ -1,28 +1,34 @@
 package graft.pipeline
 
 import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.LongAccumulator
+import org.apache.spark.util.{CollectionAccumulator, LongAccumulator}
 
 import graft.functions.{ResumeFunctions, UrlFunctions}
 import graft.kernel.ExtractKernel
 import graft.kernel.ExtractKernel.ExtractedDoc
-import graft.tables.SnapshotTable
+import graft.tables.{ResumeIndex, SnapshotTable}
 
 /**
  * The flagship dataflow (SURVEY.md §3.4) — the whole reference pipeline
  * (fetcher -> orchestrator -> processor -> uploader,
  * /root/reference/src/orchestrator.py + app.py) as ONE Spark job:
  *
- *   scan pages (column-pruned to url+html, keyed on url_key)
+ *   `plan`:
+ *     scan pages (column-pruned to url+html, keyed on url_key)
  *     -> drop what the committed snapshots hold        (resume; S1/S2)
  *     -> salt on url_key + repartition + local sort     (skew defuse; §4.3)
- *     -> Extract.kernel                                 (the "container")
+ *     -> collapse url variants -> Extract.kernel        (the "container")
+ *   `commit`:
  *     -> append to SnapshotTable + atomic commit        (uploader/K1)
  *
- * `Extract.kernel` is the one kernel stage: the streams, the bench and the
- * extraction queries run it too, so every path extracts the same way.
+ * `run` is `commit` over `plan`, and `plan` is the one definition of the
+ * pipeline: `SparkEntry.entry`, `q_extract_pipeline` and `graft.Bench`
+ * call it with no table. `Extract.kernel` is the one kernel stage: the
+ * streams and the other extraction queries run it directly (a streaming
+ * plan cannot sort), so every path extracts the same way.
  *
  * Explicit physical decisions (north_rule): the scan prunes to (url, html)
  * so the fat binary column is the only payload moved, and the salted
@@ -51,8 +57,8 @@ object Extract {
   /** A page for the kernel stage, with its retry count (prior failed
     * attempts, 0 the first time). */
   final case class PageJob(url: String, html: Array[Byte], prior_attempts: Int)
-  /** A pending row of `run` with the canonical url key it salts, dedups and
-    * resumes on. */
+  /** A pending row of `plan` with the canonical url key it salts, dedups
+    * and resumes on. */
   final case class KeyedJob(url: String, html: Array[Byte], prior_attempts: Int,
                             url_key: Long)
 
@@ -76,15 +82,40 @@ object Extract {
     kernel(pages.select(col("url"), col("html"), lit(0).as("prior_attempts")).as[PageJob])
   }
 
-  /** Run one incremental extraction pass. Quarantine semantics follow the
-    * reference's retry-then-terminal state machine (src/queue.py:59-78): a
-    * url whose rows are all failures with < maxRetries attempts is still
-    * pending — it is re-driven here with attempt = prior failure count —
-    * and becomes terminal only at maxRetries. */
+  /** One pass's docs as [[plan]] builds them. `docs` is lazy; as it is
+    * consumed, the typed step before the kernel fills `deduped` (variant
+    * collapses), `bytesIn` and `partStats` ((partition, docs, ms) per
+    * task). `resume` is the lookup's index broadcast, which [[release]]
+    * destroys once `docs` has run. */
+  final case class Planned(docs: Dataset[ExtractedDoc], deduped: LongAccumulator,
+      bytesIn: LongAccumulator, partStats: CollectionAccumulator[(Int, Long, Long)],
+      resume: Option[Broadcast[ResumeIndex]]) {
+    def release(): Unit = resume.foreach(_.destroy())
+  }
+
+  /** Run one incremental extraction pass: [[commit]] over [[plan]]. Quarantine
+    * semantics follow the reference's retry-then-terminal state machine
+    * (src/queue.py:59-78): a url whose rows are all failures with
+    * < maxRetries attempts is still pending — it is re-driven here with
+    * attempt = prior failure count — and becomes terminal only at maxRetries. */
   def run(spark: SparkSession, pagesDf: DataFrame, table: SnapshotTable,
           numSalts: Int = 256, numPartitions: Int = 0,
           maxRetries: Int = SnapshotTable.DefaultMaxRetries,
           bloomResumeMinRows: Long = DefaultBloomResumeMinRows): Metrics = {
+    val planned = plan(spark, pagesDf, Some(table), numSalts, numPartitions, maxRetries,
+      bloomResumeMinRows)
+    try commit(planned, table) finally planned.release()
+  }
+
+  /** The docs one pass extracts from `pagesDf`: resume against `table` (none
+    * when absent, as for an empty table), url_key, salt, local sort,
+    * variant collapse and [[kernel]]. The caller consumes `docs` and then
+    * calls `release`. */
+  def plan(spark: SparkSession, pagesDf: DataFrame, table: Option[SnapshotTable] = None,
+           numSalts: Int = 256, numPartitions: Int = 0,
+           maxRetries: Int = SnapshotTable.DefaultMaxRetries,
+           bloomResumeMinRows: Long = DefaultBloomResumeMinRows): Planned = {
+    import spark.implicits._
     val p = if (numPartitions > 0) numPartitions
             else spark.sparkContext.defaultParallelism
 
@@ -114,30 +145,21 @@ object Extract {
     //    upper-bounds distinct done urls, so the filter is never undersized
     //    by more than the retry fraction (fpp degrades, exactness doesn't).
     //    Retry counts come from a left join against the per-key max.
-    table.chainRows(spark) match {
-      case Some(rows) if rows >= bloomResumeMinRows =>
-        extractPending(bloomResume(pages, table, rows, maxRetries), table, numSalts, p)
-      case _ => table.resumeIndex(spark, maxRetries) match {
+    val chain = table.map(t => (t, t.chainRows(spark)))
+    val (pending, resume) = chain match {
+      case Some((t, Some(rows))) if rows >= bloomResumeMinRows =>
+        (bloomResume(pages, t, rows, maxRetries), None)
+      case _ => chain.flatMap(_._1.resumeIndex(spark, maxRetries)) match {
         case Some(ix) =>
           val bc = spark.sparkContext.broadcast(ix)
-          val notDone = pages
-            .withColumn("prior_attempts", ResumeFunctions.resumeState(col("url_key"), bc))
-            .filter(col("prior_attempts") >= 0)
-          try extractPending(notDone, table, numSalts, p) finally bc.destroy()
-        case None => // an empty table
-          extractPending(pages.withColumn("prior_attempts", lit(0)), table, numSalts, p)
+          (pages.withColumn("prior_attempts", ResumeFunctions.resumeState(col("url_key"), bc))
+            .filter(col("prior_attempts") >= 0), Some(bc))
+        case None => // no table, or an empty one
+          (pages.withColumn("prior_attempts", lit(0)), None)
       }
     }
-  }
 
-  /** Salt, collapse variants, extract, write and commit the pending rows
-    * (url, html, url_key, prior_attempts) as the table's next snapshot. */
-  private def extractPending(pending: DataFrame, table: SnapshotTable, numSalts: Int,
-                             p: Int): Metrics = {
-    val spark = pending.sparkSession
-    import spark.implicits._
-
-    val bytesIn: LongAccumulator = spark.sparkContext.longAccumulator("graft.bytesIn")
+    val bytesIn = spark.sparkContext.longAccumulator("graft.bytesIn")
     // per-partition lineage (K5 analog of the reference's per-job processor
     // log): (partition, docs, ms) — the partition-time histogram is the
     // evidence that salting defused host skew (§4.3)
@@ -184,8 +206,13 @@ object Extract {
         Iterator.empty[PageJob]
       }
     }
-    val extracted = kernel(jobs)
+    Planned(kernel(jobs), docsDeduped, bytesIn, partStats, resume)
+  }
 
+  /** Write `planned.docs` as the table's next snapshot, count it back and
+    * commit the manifest. */
+  def commit(planned: Planned, table: SnapshotTable): Metrics = {
+    val spark = planned.docs.sparkSession
     // single action: write the data files (error column stays with the data,
     // so one pass covers both success and quarantine rows), then publish the
     // manifest and flip the pointer. Committed row metrics are derived from
@@ -193,7 +220,7 @@ object Extract {
     // transformation-stage accumulator updates, so task retries/speculation
     // would double-count them. bytes_in has no output-side equivalent and
     // stays accumulator-observed (approximate under retries, documented).
-    val outDf = extracted.toDF()
+    val outDf = planned.docs.toDF()
     val (version, snapDir) = table.writeData(outDf)
     // explicit schema: a no-op snapshot writes zero part files and schema
     // inference would fail on the empty directory
@@ -201,19 +228,20 @@ object Extract {
       .agg(count(lit(1)), count(when(col("error").isNull, lit(1))))
       .collect()(0)
     val (written, ok) = (counts.getLong(0), counts.getLong(1))
+    val bytesIn = planned.bytesIn.value.toLong
     val metrics = Map[String, Long](
       "input" -> written,
       "extracted" -> ok,
       "failed" -> (written - ok),
-      "deduped" -> docsDeduped.value.toLong,
-      "bytes_in" -> bytesIn.value.toLong)
+      "deduped" -> planned.deduped.value.toLong,
+      "bytes_in" -> bytesIn)
     import scala.jdk.CollectionConverters._
-    val lineageRows = partStats.value.asScala.toSeq.sortBy(_._1).map {
+    val lineageRows = planned.partStats.value.asScala.toSeq.sortBy(_._1).map {
       case (pid, docs, ms) =>
         Map[String, Long]("partition" -> pid.toLong, "docs" -> docs, "ms" -> ms)
     }
     table.commitManifest(version, snapDir, metrics, lineage = lineageRows)
-    Metrics(version, written, ok, written - ok, bytesIn.value)
+    Metrics(version, written, ok, written - ok, bytesIn)
   }
 
   /** The Bloom resume path: pages whose key the chain has not done, with

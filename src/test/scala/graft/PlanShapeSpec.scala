@@ -50,14 +50,17 @@ class PlanShapeSpec extends AnyFunSuite {
       .getOrElse(fail("no write plan"))
 
   /** The final plans of the queries that `body` runs. */
-  private def plansOf(body: => Unit): Seq[SparkPlan] = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+  private def plansOf(body: => Unit): Seq[SparkPlan] =
+    queriesOf(body).map(_.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    })
+
+  /** The query executions that `body` runs successfully. */
+  private def queriesOf(body: => Unit): Seq[QueryExecution] = {
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
     val capture = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan match {
-          case a: AdaptiveSparkPlanExec => a.executedPlan
-          case p => p
-        })
+      override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit = qes.add(qe)
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(capture)
@@ -65,7 +68,7 @@ class PlanShapeSpec extends AnyFunSuite {
       body
       org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
     } finally spark.listenerManager.unregister(capture)
-    plans.toArray(Array.empty[SparkPlan]).toSeq
+    qes.toArray(Array.empty[QueryExecution]).toSeq
   }
 
   /** Every node of `p`, looking through adaptive plans, query stages and
@@ -120,13 +123,33 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("resume anti-join on unbounded done-set does NOT force broadcast in the pipeline") {
-    // the Bloom resume path leaves join strategy choice to Catalyst/AQE;
-    // assert the plan is an anti join of either flavor and the query compiles
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val done = docs.filter(col("doc_id") % 2 === 0).select("doc_id")
-    val anti = docs.join(done, Seq("doc_id"), "left_anti")
-    val plan = planOf(anti)
-    assert(plan.contains("LeftAnti"), plan)
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo, Join, ResolvedHint}
+    import graft.kernel.ExtractKernel.{ExtractedDoc, Lineage}
+    // the real Bloom resume pass leaves join strategy choice to
+    // Catalyst/AQE: a done set or an all-failing retry set past broadcast
+    // range must degrade to a shuffle join, not a broadcast that runs out
+    // of memory. So no join of its analyzed write plan carries a broadcast
+    // hint, on the join or as a hint node below it.
+    val dir = pagesDir(100)
+    val table = new graft.tables.SnapshotTable(Files.createTempDirectory("plan-table").toString)
+    graft.pipeline.Extract.run(spark, spark.read.parquet(dir).filter(!col("url").endsWith("0")),
+      table, numSalts = 4, numPartitions = 2)
+    // a retryable failure, so the pass also joins the retry counts
+    val retry = spark.read.parquet(dir).select("url").as[String].collect().filter(_.endsWith("0")).head
+    table.commit(Seq(ExtractedDoc(retry, "html", null, null, null, Array.empty, 0.5, 0L, "boom",
+      Lineage(0, 0, "error"))).toDS().toDF(), Map("input" -> 1L, "extracted" -> 0L, "failed" -> 1L))
+    val write = queriesOf(graft.pipeline.Extract.run(spark, spark.read.parquet(dir), table,
+        numSalts = 4, numPartitions = 2, bloomResumeMinRows = 0))
+      .find(_.analyzed.toString.contains("InsertIntoHadoopFsRelationCommand"))
+      .getOrElse(fail("no write plan")).analyzed
+    def forced(h: Option[HintInfo]): Boolean = h.exists(_.strategy.contains(BROADCAST))
+    val joins = write.collect { case j: Join => j }
+    assert(joins.map(_.joinType.sql).toSet === Set("LEFT SEMI", "LEFT ANTI", "LEFT OUTER"),
+      s"the Bloom pass does not join as expected:\n$write")
+    val hinted = joins.filter(j => forced(j.hint.leftHint) || forced(j.hint.rightHint)) ++
+      joins.flatMap(_.children).flatMap(_.collect { case h: ResolvedHint if forced(Some(h.hints)) => h })
+    assert(hinted.isEmpty, s"the Bloom pass forces a broadcast:\n$write")
   }
 
   test("corpus-build chain: the gate + scrub stages add NO exchange beyond " +

@@ -190,6 +190,45 @@ class ExtractPipelineSpec extends AnyFunSuite {
     assert(written === Map(retryUrl -> 1, fresh -> 0), s"$written")
   }
 
+  test("the lookup's index broadcast lives for one pass, also when its write throws") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    // every job's task binary is a broadcast too, released only once the
+    // ContextCleaner sees it collected: the blocks a pass must release
+    // itself are those of its ResumeIndex (destroy() is asynchronous)
+    def indexBlocks: Int = org.apache.spark.graft.BroadcastBlocks.values(sc)
+      .count(_.isInstanceOf[graft.tables.ResumeIndex])
+    def released(before: Int): Unit =
+      eventually(timeout(20.seconds), interval(50.millis))(assert(indexBlocks <= before))
+    val pages = spark.range(40).mapPartitions(_.map(i => PageGen.page(i, 5L))).toDF()
+    val table = new SnapshotTable(tmp("table7"))
+    Extract.run(spark, pages.filter(col("url").endsWith("0") || col("url").endsWith("5")),
+      table, numSalts = 4, numPartitions = 2)
+    val before = indexBlocks
+
+    // plan holds the broadcast until release
+    val planned = Extract.plan(spark, pages, Some(table), numSalts = 4, numPartitions = 2)
+    assert(planned.resume.nonEmpty && indexBlocks === before + 1)
+    planned.release()
+    released(before)
+
+    val m = Extract.run(spark, pages, table, numSalts = 4, numPartitions = 2)
+    assert(m.input === 32)
+    released(before)
+
+    // new pages whose html throws in the write, after the index is broadcast
+    val boom = udf((b: Array[Byte]) => if (b != null) throw new IllegalStateException("boom") else b)
+    val failing = spark.range(40, 50).mapPartitions(_.map(i => PageGen.page(i, 5L))).toDF()
+      .withColumn("html", boom(col("html")))
+    val e = intercept[Exception](Extract.run(spark, failing, table, numSalts = 4, numPartitions = 2))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("boom")), e)
+    released(before)
+  }
+
   test("canonical url keys: case/port/fragment/param-order variants collapse to one extraction") {
     import spark.implicits._
     val tableDir = tmp("table4")
