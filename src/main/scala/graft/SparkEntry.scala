@@ -34,22 +34,34 @@ object SparkEntry {
     * of splits never repartitions and the exchange only exists where the
     * layout starves the cluster. Round-robin placement cannot change any
     * result here: every consumer aggregates, joins or windows with its own
-    * keyed exchange downstream. Measured on its five callers (`BenchExtra
-    * noop 5`, sum of per-query minima, 4 cores, two runs a side): at sf0.1
-    * 5.94 and 5.52 s with the fan, 7.32 and 6.84 s without; at sf0.01 it
-    * loses, 4.37 and 4.06 s against 3.44 and 3.72 s (BENCH.md). */
+    * keyed exchange downstream. */
   private def tblFan(s: SparkSession, dir: String, name: String): DataFrame = {
     val df = tbl(s, dir, name)
-    val bytes = scanBytes(new java.io.File(s"$dir/$name.parquet"))
-    if (bytes < 0) df // unknown layout: leave the scan alone
-    else {
-      val maxPB = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        s.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-      val splits = math.max(1L, (bytes + maxPB - 1) / maxPB)
-      val target = s.sparkContext.defaultParallelism
-      if (splits * 2 <= target) df.repartition(target) else df
-    }
+    val maxPB = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      s.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+    val target = s.sparkContext.defaultParallelism
+    if (fansOut(scanBytes(new java.io.File(s"$dir/$name.parquet")), maxPB, target))
+      df.repartition(target)
+    else df
   }
+
+  /** Whether `tblFan` fans a scan of `bytes` data bytes (-1: unknown layout)
+    * out: at least `FanMinBytes`, in at most half as many splits as there
+    * are task threads. */
+  private[graft] def fansOut(bytes: Long, maxPartitionBytes: Long, parallelism: Int): Boolean =
+    bytes >= FanMinBytes &&
+      math.max(1L, (bytes + maxPartitionBytes - 1) / maxPartitionBytes) * 2 <= parallelism
+
+  /** Below this many bytes the fan's exchange costs more than spreading the
+    * scan saves. Measured on `tblFan`'s five callers (`BenchExtra noop 5`,
+    * sum of per-query minima, 4 cores, fan on against off, two runs a side):
+    * at sf0.01 (a 65,049-byte documents file) 4.65 and 4.03 s with the fan,
+    * 3.84 and 3.92 s without; at sf0.1 (594,568 bytes) 5.25 and 5.80 s
+    * with it, 6.61 and 8.06 s without (BENCH.md). A line through the two
+    * median gains (-0.46 s, +1.81 s) crosses zero at 168 KiB; the same fit
+    * through the earlier runs in BENCH.md crosses at 229 KiB. The floor
+    * sits between the two. */
+  private[graft] val FanMinBytes = 192L * 1024
 
   /** Data bytes of a parquet file or directory (files named `_*` are
     * metadata), or -1 when the layout is unknown: a missing path, or a

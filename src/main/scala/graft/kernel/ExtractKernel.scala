@@ -185,17 +185,18 @@ object ExtractKernel {
   private val EmptySpans: Array[Span] = Array.empty
 
   /** Quality is a sampled heuristic: scored on the first 20k code points
-    * (wordlist hit-ratio converges long before that; keeps huge docs cheap). */
+    * (wordlist hit-ratio converges long before that; keeps huge docs cheap).
+    * One count of the text gives both `n_chars` and the sample's end. */
   private val QualitySampleCp = 20000
 
   private def done(url: String, docType: String, text: String,
                    main: String, title: String, spans: Array[Span],
                    pid: Int, attempt: Int, extractor: String): ExtractedDoc = {
+    val n = if (text == null) 0 else TextKernel.cpLength(text)
     val q =
       if (text == null) 0.5
-      else QualityScore.computeQuality(TextKernel.truncate(text, Some(QualitySampleCp)))
-    ExtractedDoc(url, docType, text, main, title, spans, q,
-      if (text == null) 0L else TextKernel.cpLength(text).toLong, null,
+      else QualityScore.score(text, TextKernel.prefixEnd(text, n, QualitySampleCp))
+    ExtractedDoc(url, docType, text, main, title, spans, q, n.toLong, null,
       Lineage(pid, attempt, extractor))
   }
 }

@@ -110,70 +110,3 @@ object OcrArbiter {
     if (TextKernel.hasContent(finalText)) Some(finalText) else None
   }
 }
-
-/**
- * Wordlist quality score (src/ocr_watcher.py:75-89): ratio of recognized
- * words among alpha words of length >= 3 (length filter BEFORE punctuation
- * strip, as in the reference); 0.5 when fewer than 3 checkable words or no
- * wordlist. Doubles as this engine's extraction-quality metric.
- */
-object QualityScore {
-  import TextKernel.pyIsSpace
-
-  private val StripChars: Set[Char] = ".,;:!?()[]{}\"'-".toSet
-
-  /** Bundled common-word list (en+de), loaded once per JVM (the reference's
-    * "load model once per process" idiom, src/ocr_watcher.py:60-65). */
-  lazy val defaultWordlist: Set[String] = {
-    val in = getClass.getResourceAsStream("/graft/wordlist.txt")
-    if (in == null) Set.empty
-    else try scala.io.Source.fromInputStream(in, "UTF-8").getLines().map(_.trim).filter(_.nonEmpty).toSet
-    finally in.close()
-  }
-
-  def computeQuality(text: String, wordlist: Set[String] = defaultWordlist): Double = {
-    if (wordlist.isEmpty || text == null || text.isEmpty) return 0.5
-    // Streaming single pass (hot path in the extraction kernel): walk
-    // lowercase tokens without materializing intermediate collections.
-    // Semantics identical to the reference list pipeline (golden-tested):
-    // split on pyIsSpace runs, token length >= 3 BEFORE punctuation strip,
-    // all-alpha check, wordlist hit ratio.
-    var checkable = 0
-    var recognized = 0
-    val lowered = text.toLowerCase(java.util.Locale.ROOT)
-    val n = lowered.length
-    var i = 0
-    while (i < n) {
-      // find next token [i, j)
-      while (i < n && pyIsSpace(lowered.codePointAt(i))) i += Character.charCount(lowered.codePointAt(i))
-      var j = i
-      var cps = 0
-      while (j < n && !pyIsSpace(lowered.codePointAt(j))) {
-        cps += 1
-        j += Character.charCount(lowered.codePointAt(j))
-      }
-      if (cps >= 3) {
-        // strip punctuation from both ends
-        var s = i
-        var e = j
-        while (s < e && StripChars.contains(lowered.charAt(s))) s += 1
-        while (e > s && StripChars.contains(lowered.charAt(e - 1))) e -= 1
-        if (e > s) {
-          var alpha = true
-          var k = s
-          while (alpha && k < e) {
-            val cp = lowered.codePointAt(k)
-            if (!Character.isLetter(cp)) alpha = false
-            k += Character.charCount(cp)
-          }
-          if (alpha) {
-            checkable += 1
-            if (wordlist.contains(lowered.substring(s, e))) recognized += 1
-          }
-        }
-      }
-      i = j
-    }
-    if (checkable < 3) 0.5 else recognized.toDouble / checkable
-  }
-}

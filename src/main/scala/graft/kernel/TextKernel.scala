@@ -23,6 +23,14 @@ import java.nio.charset.{CharacterCodingException, CodingErrorAction, StandardCh
  *   - sanitize:           src/uploader.py:159-172
  *   - NUL strip:          src/processor.py:490,508,621,706
  *   - page join:          src/processor.py:479-496
+ *
+ * The fallback gate reads each document in one pass over its bytes
+ * (`extractTextFallback`): the ASCII prefix is counted byte by byte, the
+ * rest is validated as UTF-8 code point by code point (the strict decoder's
+ * Table 3-7) and counted, and only an ill-formed sequence sends the tail to
+ * a latin-1 count. Every code point below U+0100 is classified by one
+ * literal table (`flags`); the rest by one `Character.getType` call. The
+ * gate decodes the `String` once, after it has passed.
  */
 object TextKernel {
 
@@ -39,26 +47,55 @@ object TextKernel {
   // Unicode predicates (Python parity)
   // ---------------------------------------------------------------------
 
-  /** Python `str.isspace()` for one code point: bidi classes WS/B/S
-    * (0x09-0x0D, 0x1C-0x1F, 0x20, 0x85) plus categories Zs/Zl/Zp. */
-  def pyIsSpace(cp: Int): Boolean = {
-    if ((cp >= 0x09 && cp <= 0x0D) || cp == 0x20 || (cp >= 0x1C && cp <= 0x1F) || cp == 0x85) true
-    else if (cp < 0x80) false
-    else Character.getType(cp) match {
-      case Character.SPACE_SEPARATOR | Character.LINE_SEPARATOR | Character.PARAGRAPH_SEPARATOR => true
-      case _ => false
-    }
+  /** Flag bits of `flags(cp)`. */
+  private[kernel] final val Counted = 1 // Python `isprintable()` or \t \n \r: the T4 ratio's numerator
+  private[kernel] final val Space = 2   // Python `isspace()`
+  private[kernel] final val Letter = 4  // Python `isalpha()` (`Character.isLetter`)
+  private[kernel] final val Strip = 8   // the O4 score's strip set .,;:!?()[]{}"'-
+
+  private val SpaceTypes = (1 << Character.SPACE_SEPARATOR) |
+    (1 << Character.LINE_SEPARATOR) | (1 << Character.PARAGRAPH_SEPARATOR)
+  private val UnprintableTypes = SpaceTypes | (1 << Character.CONTROL) |
+    (1 << Character.FORMAT) | (1 << Character.SURROGATE) |
+    (1 << Character.PRIVATE_USE) | (1 << Character.UNASSIGNED)
+  private val LetterTypes = (1 << Character.UPPERCASE_LETTER) |
+    (1 << Character.LOWERCASE_LETTER) | (1 << Character.TITLECASE_LETTER) |
+    (1 << Character.MODIFIER_LETTER) | (1 << Character.OTHER_LETTER)
+
+  /** The flags that a code point's Unicode category gives. Python
+    * `isprintable()` is false iff the category is in {Cc, Cf, Cs, Co, Cn,
+    * Zl, Zp} or (Zs and cp != U+0020); `isspace()` holds for categories
+    * Zs/Zl/Zp and for the bidi classes WS/B/S, which add only code points
+    * below U+0100. */
+  private def typeFlags(cp: Int): Int = {
+    val t = 1 << Character.getType(cp)
+    (if ((t & UnprintableTypes) == 0) Counted else 0) |
+      (if ((t & SpaceTypes) != 0) Space else 0) | (if ((t & LetterTypes) != 0) Letter else 0)
   }
 
-  /** Python `str.isprintable()` for one code point: false iff category in
-    * {Cc, Cf, Cs, Co, Cn, Zl, Zp} or (Zs and cp != U+0020). */
-  def pyIsPrintable(cp: Int): Boolean = Character.getType(cp) match {
-    case Character.CONTROL | Character.FORMAT | Character.SURROGATE |
-        Character.PRIVATE_USE | Character.UNASSIGNED |
-        Character.LINE_SEPARATOR | Character.PARAGRAPH_SEPARATOR => false
-    case Character.SPACE_SEPARATOR => cp == 0x20
-    case _ => true
+  /** `flags` of U+0000..U+00FF: `typeFlags` and the exceptions below U+0100,
+    * that is U+0020 and \t \n \r counted, the bidi whitespace 0x09-0x0D,
+    * 0x1C-0x1F and 0x85, and the strip set. */
+  private val Latin1: Array[Byte] = {
+    // a plain loop: `Array.tabulate` would initialize the ClassTag machinery
+    // inside the first kernel call of a cold JVM
+    val table = new Array[Byte](256)
+    var cp = 0
+    while (cp < 256) {
+      val counted = cp == 0x20 || cp == 0x09 || cp == 0x0A || cp == 0x0D
+      val space = (cp >= 0x09 && cp <= 0x0D) || (cp >= 0x1C && cp <= 0x1F) || cp == 0x85
+      table(cp) = (typeFlags(cp) | (if (counted) Counted else 0) | (if (space) Space else 0) |
+        (if (".,;:!?()[]{}\"'-".indexOf(cp) >= 0) Strip else 0)).toByte
+      cp += 1
+    }
+    table
   }
+
+  /** The Python predicates of one code point as flag bits. */
+  private[kernel] def flags(cp: Int): Int = if (cp < 0x100) Latin1(cp) else typeFlags(cp)
+
+  /** Python `str.isspace()` for one code point. */
+  def pyIsSpace(cp: Int): Boolean = (flags(cp) & Space) != 0
 
   /** Python `str.strip()` (no args): strip leading/trailing pyIsSpace code
     * points. Java's `trim` (<=U+0020 only) and `strip` (isWhitespace, which
@@ -98,9 +135,18 @@ object TextKernel {
     case None => s
     case Some(c) =>
       if (c <= 0) s // cap<=0 never reaches here in reference (mapped to None), defensive
-      else if (s.codePointCount(0, s.length) <= c) s
-      else s.substring(0, s.offsetByCodePoints(0, c))
+      else {
+        val end = prefixEnd(s, cpLength(s), c)
+        if (end == s.length) s else s.substring(0, end)
+      }
   }
+
+  /** Char index just past the first `cap` code points of `s`, which holds
+    * `n` code points (`cpLength`, constant time on a Latin-1 string). */
+  private[kernel] def prefixEnd(s: String, n: Int, cap: Int): Int =
+    if (n <= cap) s.length
+    else if (n == s.length) cap // no surrogate pair
+    else s.offsetByCodePoints(0, cap)
 
   // ---------------------------------------------------------------------
   // T7: NUL strip (src/processor.py:490 etc.) — replace('\x00','')
@@ -291,7 +337,8 @@ object TextKernel {
   // T4: extract_text_fallback (src/processor.py:676-713)
   //   reject size > fallbackMaxSize; read min(size, cap) BYTES; reject raw
   //   NUL byte; decode utf-8 -> latin-1; reject blank; printable ratio
-  //   (isprintable or \n\r\t) >= 0.99 over code points; strip NUL chars.
+  //   (isprintable or \n\r\t) >= 0.99 over code points; strip NUL chars
+  //   (a no-op after the NUL reject).
   // ---------------------------------------------------------------------
   def printableRatio(text: String): Double = {
     if (text.isEmpty) return 0.0
@@ -300,25 +347,89 @@ object TextKernel {
     var i = 0
     while (i < text.length) {
       val cp = text.codePointAt(i)
-      if (pyIsPrintable(cp) || cp == 0x0A || cp == 0x0D || cp == 0x09) printable += 1
+      if ((flags(cp) & Counted) != 0) printable += 1
       total += 1
       i += Character.charCount(cp)
     }
     printable.toDouble / total.toDouble
   }
 
+  /** T4 in one pass over the first min(size, cap) bytes: the NUL reject, the
+    * UTF-8 check and the code point, printable and whitespace counts. An
+    * all-ASCII payload becomes its `String` directly; an ill-formed UTF-8
+    * sequence recounts the bytes after the ASCII prefix as latin-1. */
   def extractTextFallback(bytes: Array[Byte], cfg: Config = defaultConfig): Option[String] = {
     if (bytes.length > cfg.fallbackMaxSize) return None
-    val readN = cfg.maxTextLength match {
+    val n = cfg.maxTextLength match {
       case Some(c) => math.min(bytes.length, c)
       case None    => bytes.length
     }
-    val raw = if (readN == bytes.length) bytes else java.util.Arrays.copyOfRange(bytes, 0, readN)
-    if (raw.exists(_ == 0x00.toByte)) return None
-    val text = decodeUtf8Strict(raw).getOrElse(decodeLatin1(raw))
-    if (!hasContent(text)) return None
-    if (printableRatio(text) < cfg.fallbackMinPrintable) return None
-    Some(stripNul(text)) // no-op post NUL-byte reject; kept for reference parity
+    var counted = 0 // code points that are printable or \t \n \r
+    var spaces = 0  // code points that are whitespace
+    var i = 0
+    while (i < n && bytes(i) > 0) { // the ASCII prefix reads alike in UTF-8 and latin-1
+      val f = Latin1(bytes(i))
+      if ((f & Counted) != 0) counted += 1
+      if ((f & Space) != 0) spaces += 1
+      i += 1
+    }
+    val asciiEnd = i
+    val asciiCounted = counted
+    val asciiSpaces = spaces
+    var cps = i
+    var utf8 = true
+    while (i < n && utf8) {
+      val cp = utf8At(bytes, i, n)
+      if (cp == 0) return None
+      if (cp < 0) utf8 = false
+      else {
+        val f = flags(cp)
+        if ((f & Counted) != 0) counted += 1
+        if ((f & Space) != 0) spaces += 1
+        cps += 1
+        i += (if (cp < 0x80) 1 else if (cp < 0x800) 2 else if (cp < 0x10000) 3 else 4)
+      }
+    }
+    if (!utf8) { // latin-1 is total: one code point per byte
+      counted = asciiCounted
+      spaces = asciiSpaces
+      cps = n
+      i = asciiEnd
+      while (i < n) {
+        val b = bytes(i)
+        if (b == 0) return None
+        val f = Latin1(b & 0xFF)
+        if ((f & Counted) != 0) counted += 1
+        if ((f & Space) != 0) spaces += 1
+        i += 1
+      }
+    }
+    if (spaces == cps || counted.toDouble / cps < cfg.fallbackMinPrintable) None
+    else Some(new String(bytes, 0, n,
+      if (utf8 && asciiEnd < n) StandardCharsets.UTF_8 else StandardCharsets.ISO_8859_1))
+  }
+
+  /** The code point of the well-formed UTF-8 sequence at `i` of `b(0 until n)`
+    * (Unicode Table 3-7: no overlong form, surrogate or code point above
+    * U+10FFFF, as the strict decoder reads it), or -1. */
+  private def utf8At(b: Array[Byte], i: Int, n: Int): Int = {
+    val b0 = b(i) & 0xFF
+    if (b0 < 0x80) return b0
+    val len = if (b0 < 0xC2) 0 else if (b0 < 0xE0) 2 else if (b0 < 0xF0) 3 else if (b0 < 0xF5) 4 else 0
+    if (len == 0 || i + len > n) return -1
+    val b1 = b(i + 1) & 0xFF
+    val lo = if (b0 == 0xE0) 0xA0 else if (b0 == 0xF0) 0x90 else 0x80
+    val hi = if (b0 == 0xED) 0x9F else if (b0 == 0xF4) 0x8F else 0xBF
+    if (b1 < lo || b1 > hi) return -1
+    var cp = (b0 & (0x7F >> len)) << 6 | (b1 & 0x3F)
+    var k = 2
+    while (k < len) {
+      val bk = b(i + k) & 0xFF
+      if ((bk & 0xC0) != 0x80) return -1
+      cp = cp << 6 | (bk & 0x3F)
+      k += 1
+    }
+    cp
   }
 
   // ---------------------------------------------------------------------

@@ -131,4 +131,14 @@ class EntrySpec extends AnyFunSuite {
     }
     assert(SparkEntry.scanBytes(unlistable) === -1L)
   }
+
+  test("tblFan fans a starved scan out only from its byte floor up") {
+    val split = 128L << 20
+    assert(!SparkEntry.fansOut(-1L, split, 4), "unknown layout")
+    assert(!SparkEntry.fansOut(SparkEntry.FanMinBytes - 1, split, 4))
+    assert(SparkEntry.fansOut(SparkEntry.FanMinBytes, split, 4))
+    assert(!SparkEntry.fansOut(SparkEntry.FanMinBytes, split, 1), "one task thread")
+    assert(SparkEntry.fansOut(2 * split, split, 4))
+    assert(!SparkEntry.fansOut(3 * split, split, 4), "3 splits already use most of 4 threads")
+  }
 }
