@@ -14,10 +14,7 @@ import org.apache.spark.sql.SparkSession
  *       (`Bench.computeAll`: the noop sink, which computes EVERY column),
  *       print min/median per query as JSON; a run that throws prints ERR
  *       and is left out of min and median (a query with no successful run
- *       is "ERR" and not in total_min).
- *   runMain graft.BenchExtra time <reps> [queryCsv]
- *     — same but timing fn(spark, sfDir).count(), which lets the optimizer
- *       prune unread columns (the sweep's subject before it moved to noop).
+ *       is "ERR" and not in total_min). The default mode.
  *
  * Uses the same session shape as Bench.buildSession and the same
  * $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS contract.
@@ -30,7 +27,7 @@ object BenchExtra {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Bench.buildSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    val mode = if (args.nonEmpty) args(0) else "time"
+    val mode = if (args.nonEmpty) args(0) else "noop"
 
     def selected(csvIdx: Int): Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] = {
       val all = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -58,7 +55,7 @@ object BenchExtra {
           }
         }
 
-      case "time" | "noop" =>
+      case "noop" =>
         val reps = if (args.length > 1) args(1).toInt else 3
         // warmup (same as Bench)
         try spark.read.parquet(s"$sfDir/documents.parquet").limit(10).count()
@@ -66,10 +63,7 @@ object BenchExtra {
         val results = selected(2).map { case (name, fn) =>
           spark.sparkContext.setJobDescription(name)
           val runs = (1 to reps).map { _ =>
-            Bench.timed {
-              if (mode == "noop") Bench.computeAll(fn(spark, sfDir))
-              else fn(spark, sfDir).count()
-            }
+            Bench.timed(Bench.computeAll(fn(spark, sfDir)))
           }
           runs.foreach(_.failed.foreach(e => System.err.println(s"[$name] ERR $e")))
           // failed runs are never timings: min and median cover the rest
@@ -87,6 +81,7 @@ object BenchExtra {
           case (n, None) => s""""$n":"ERR""""
         }.mkString("{", ",", "}")
         println(s"""{"mode":"$mode","reps":${reps},"total_min":${"%.3f".format(total)},"queries":$js}""")
+      case other => sys.error(s"unknown mode '$other': noop or plans")
     }
     spark.stop()
   }

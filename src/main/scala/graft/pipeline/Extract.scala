@@ -19,7 +19,7 @@ import graft.tables.{ResumeIndex, SnapshotTable}
  *   `plan`:
  *     scan pages (column-pruned to url+html, keyed on url_key)
  *     -> drop what the committed snapshots hold        (resume; S1/S2)
- *     -> salt on url_key + repartition + local sort     (skew defuse; §4.3)
+ *     -> repartition on url_key + local sort            (skew defuse; §4.3)
  *     -> collapse url variants -> Extract.kernel        (the "container")
  *   `commit`:
  *     -> append to SnapshotTable + atomic commit        (uploader/K1)
@@ -31,8 +31,8 @@ import graft.tables.{ResumeIndex, SnapshotTable}
  * plan cannot sort), so every path extracts the same way.
  *
  * Explicit physical decisions (north_rule): the scan prunes to (url, html)
- * so the fat binary column is the only payload moved, and the salted
- * repartition is the only exchange of the write. Resume has two strategies,
+ * so the fat binary column is the only payload moved, and the repartition
+ * on url_key is the only exchange of the write. Resume has two strategies,
  * chosen by the chain's row count:
  *  - the lookup (below `bloomResumeMinRows`): one job of one stage folds the
  *    chain into a [[graft.tables.ResumeIndex]], and `resume_state(url_key)`
@@ -41,8 +41,11 @@ import graft.tables.{ResumeIndex, SnapshotTable}
  *  - the Bloom path (at or above it): the Bloom-pruned anti-join, which never
  *    exchanges the fat side once the done set outgrows broadcast, plus a
  *    retry left join and the per-url failure aggregate.
- * Partition count P and salt count S are explicit inputs sized for ~128MB
- * html per task at the target scale.
+ * `url_key` is the url hash the north star repartitions on to defuse
+ * host-level skew: xxhash64 of the canonical url, so one host's pages
+ * spread over every partition while a page's spellings share one. The
+ * partition count P is an explicit input sized for ~128MB html per task at
+ * the target scale.
  */
 object Extract {
 
@@ -57,8 +60,8 @@ object Extract {
   /** A page for the kernel stage, with its retry count (prior failed
     * attempts, 0 the first time). */
   final case class PageJob(url: String, html: Array[Byte], prior_attempts: Int)
-  /** A pending row of `plan` with the canonical url key it salts, dedups
-    * and resumes on. */
+  /** A pending row of `plan` with the canonical url key it partitions,
+    * dedups and resumes on. */
   final case class KeyedJob(url: String, html: Array[Byte], prior_attempts: Int,
                             url_key: Long)
 
@@ -99,20 +102,20 @@ object Extract {
     * < maxRetries attempts is still pending — it is re-driven here with
     * attempt = prior failure count — and becomes terminal only at maxRetries. */
   def run(spark: SparkSession, pagesDf: DataFrame, table: SnapshotTable,
-          numSalts: Int = 256, numPartitions: Int = 0,
+          numPartitions: Int = 0,
           maxRetries: Int = SnapshotTable.DefaultMaxRetries,
           bloomResumeMinRows: Long = DefaultBloomResumeMinRows): Metrics = {
-    val planned = plan(spark, pagesDf, Some(table), numSalts, numPartitions, maxRetries,
+    val planned = plan(spark, pagesDf, Some(table), numPartitions, maxRetries,
       bloomResumeMinRows)
     try commit(planned, table) finally planned.release()
   }
 
   /** The docs one pass extracts from `pagesDf`: resume against `table` (none
-    * when absent, as for an empty table), url_key, salt, local sort,
+    * when absent, as for an empty table), url_key, repartition, local sort,
     * variant collapse and [[kernel]]. The caller consumes `docs` and then
     * calls `release`. */
   def plan(spark: SparkSession, pagesDf: DataFrame, table: Option[SnapshotTable] = None,
-           numSalts: Int = 256, numPartitions: Int = 0,
+           numPartitions: Int = 0,
            maxRetries: Int = SnapshotTable.DefaultMaxRetries,
            bloomResumeMinRows: Long = DefaultBloomResumeMinRows): Planned = {
     import spark.implicits._
@@ -123,7 +126,7 @@ object Extract {
     // text/lang/warc_ts are never read — verify via .explain ReadSchema).
     // The canonical url key (xxhash64 of the RFC 3986-normalized url,
     // functions/UrlFunctions) computes in the same scan projection and is
-    // THE pipeline key: salting, within-batch variant collapse, and resume
+    // THE pipeline key: partitioning, within-batch variant collapse, and resume
     // all go through it, so two spellings of one page are one extraction —
     // the normalization the reference's url-keyed queue lacks
     // (src/queue.py:24-33 keys raw strings).
@@ -162,21 +165,19 @@ object Extract {
     val bytesIn = spark.sparkContext.longAccumulator("graft.bytesIn")
     // per-partition lineage (K5 analog of the reference's per-job processor
     // log): (partition, docs, ms) — the partition-time histogram is the
-    // evidence that salting defused host skew (§4.3)
+    // evidence that the url_key partitioning defused host skew (§4.3)
     val partStats = spark.sparkContext.collectionAccumulator[(Int, Long, Long)]("graft.partStats")
 
-    // Salt on the canonical key (variants share a salt, hence a partition),
-    // then sort within partitions by (url_key, url): the spillable external
-    // sort groups variant spellings adjacently so the typed step below
-    // collapses them streaming — deterministic (lexicographically smallest
-    // spelling survives), no per-partition buffering, and still exactly one
-    // exchange (the Sort is partition-local).
+    // Repartition on the canonical key (variants share it, hence a
+    // partition), then sort within partitions by (url_key, url): the
+    // spillable external sort groups variant spellings adjacently so the
+    // typed step below collapses them streaming — deterministic
+    // (lexicographically smallest spelling survives), no per-partition
+    // buffering, and still exactly one exchange (the Sort is partition-local).
     val docsDeduped = spark.sparkContext.longAccumulator("graft.docsDeduped")
     val sorted = pending
-      .withColumn("salt", pmod(col("url_key"), lit(numSalts)).cast("int"))
-      .repartition(p, col("salt"))
+      .repartition(p, col("url_key"))
       .sortWithinPartitions(col("url_key"), col("url"))
-      .select(col("url"), col("html"), col("prior_attempts"), col("url_key"))
       .as[KeyedJob]
 
     // The typed step that feeds the kernel: variant collapse, bytes_in and

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{DeserializeToObjectExec, QueryExecution,
   SerializeFromObjectExec, SparkPlan}
@@ -15,10 +16,10 @@ import java.nio.file.Files
   * (column pruning to (url, html), filter pushdown to parquet, broadcast
   * only where intended, whole-stage codegen on the SQL surface). The
   * flagship pins run the real `Extract.run` and assert on the write plan it
-  * executed: on a fresh table exactly one exchange (the salted repartition)
-  * and one encoder round trip through `Extract.kernel`; on a lookup resume
-  * no join and no chain scan; on a Bloom resume, html still crosses only
-  * that exchange. */
+  * executed: on a fresh table exactly one exchange, hashpartitioning(url_key,
+  * P), and one encoder round trip through `Extract.kernel`; on a lookup
+  * resume that is still the only exchange, with no join and no chain scan;
+  * on a Bloom resume, html crosses only that exchange. */
 class PlanShapeSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSession.builder()
@@ -63,6 +64,9 @@ class PlanShapeSpec extends AnyFunSuite {
       override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit = qes.add(qe)
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    // events of queries run before `body` are delivered asynchronously:
+    // drain them first, or one could land in `capture`
+    org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
     spark.listenerManager.register(capture)
     try {
       body
@@ -80,12 +84,19 @@ class PlanShapeSpec extends AnyFunSuite {
     case o => o.children.flatMap(nodes)
   })
 
+  /** Whether `e` is the kernel stage's exchange: hash partitioning on
+    * url_key alone into `p` partitions. */
+  private def byUrlKey(e: ShuffleExchangeExec, p: Int): Boolean = e.outputPartitioning match {
+    case HashPartitioning(Seq(k: Attribute), n) => k.name == "url_key" && n == p
+    case _ => false
+  }
+
   /** The write plan of `Extract.run` over 100 pages into an empty table. */
   private lazy val freshWritePlan: SparkPlan = {
     val dir = pagesDir(100)
     val table = new graft.tables.SnapshotTable(Files.createTempDirectory("plan-table").toString)
     writePlanOf(graft.pipeline.Extract.run(spark, spark.read.parquet(dir), table,
-      numSalts = 16, numPartitions = 4))
+      numPartitions = 4))
   }
 
   test("extraction scan prunes to (url, html) — the fat column plus key only") {
@@ -96,10 +107,13 @@ class PlanShapeSpec extends AnyFunSuite {
       s"unpruned columns leak into the scan: $readSchema")
   }
 
-  test("flagship pipeline has exactly one exchange (the salted repartition)") {
+  test("flagship pipeline has exactly one exchange, hashpartitioning(url_key, P)") {
     val plan = freshWritePlan.toString
     val exchanges = plan.linesIterator.count(_.contains("Exchange"))
     assert(exchanges === 1, s"expected exactly 1 exchange, plan:\n$plan")
+    val shuffles = nodes(freshWritePlan).collect { case e: ShuffleExchangeExec => e }.distinct
+    assert(shuffles.length === 1 && byUrlKey(shuffles.head, 4),
+      s"expected the one exchange to be hashpartitioning(url_key, 4):\n$plan")
     // the kernel stage decodes rows into objects once and encodes its docs
     // once: a second encoder round trip would show up as a second pair
     val all = nodes(freshWritePlan)
@@ -134,13 +148,13 @@ class PlanShapeSpec extends AnyFunSuite {
     val dir = pagesDir(100)
     val table = new graft.tables.SnapshotTable(Files.createTempDirectory("plan-table").toString)
     graft.pipeline.Extract.run(spark, spark.read.parquet(dir).filter(!col("url").endsWith("0")),
-      table, numSalts = 4, numPartitions = 2)
+      table, numPartitions = 2)
     // a retryable failure, so the pass also joins the retry counts
     val retry = spark.read.parquet(dir).select("url").as[String].collect().filter(_.endsWith("0")).head
     table.commit(Seq(ExtractedDoc(retry, "html", null, null, null, Array.empty, 0.5, 0L, "boom",
       Lineage(0, 0, "error"))).toDS().toDF(), Map("input" -> 1L, "extracted" -> 0L, "failed" -> 1L))
     val write = queriesOf(graft.pipeline.Extract.run(spark, spark.read.parquet(dir), table,
-        numSalts = 4, numPartitions = 2, bloomResumeMinRows = 0))
+        numPartitions = 2, bloomResumeMinRows = 0))
       .find(_.analyzed.toString.contains("InsertIntoHadoopFsRelationCommand"))
       .getOrElse(fail("no write plan")).analyzed
     def forced(h: Option[HintInfo]): Boolean = h.exists(_.strategy.contains(BROADCAST))
@@ -291,20 +305,20 @@ class PlanShapeSpec extends AnyFunSuite {
     val dir = pagesDir(200)
     val table = new graft.tables.SnapshotTable(Files.createTempDirectory("plan-table").toString)
     graft.pipeline.Extract.run(spark, spark.read.parquet(dir).filter(!col("url").endsWith("0")),
-      table, numSalts = 4, numPartitions = 2)
+      table, numPartitions = 2)
     // the real resume pass, forced onto the Bloom-pruned anti-join, under
-    // adaptive and static planning: html crosses exactly one shuffle, the
-    // salted repartition, whichever join strategies get picked
+    // adaptive and static planning: html crosses exactly one shuffle,
+    // hashpartitioning(url_key, 2), whichever join strategies get picked
     for (aqe <- Seq("true", "false")) {
       spark.conf.set("spark.sql.adaptive.enabled", aqe)
       try {
         val plan = writePlanOf(graft.pipeline.Extract.run(spark, spark.read.parquet(dir),
-          table, numSalts = 4, numPartitions = 2, bloomResumeMinRows = 0))
+          table, numPartitions = 2, bloomResumeMinRows = 0))
         val s = plan.toString
         assert(s.contains("might_contain"), s"AQE $aqe: bloom probe missing:\n$s")
         val fat = nodes(plan).collect { case e: ShuffleExchangeExec => e }.distinct
           .filter(_.output.exists(_.name == "html"))
-        assert(fat.length === 1 && fat.head.outputPartitioning.toString.contains("salt"),
+        assert(fat.length === 1 && byUrlKey(fat.head, 2),
           s"AQE $aqe: html crosses ${fat.length} shuffles:\n$s")
       } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
     }
@@ -324,7 +338,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // pages still pending for the pass under test
     val (done, rest) = pages.select("url").as[String].collect().sorted.splitAt(40)
     graft.pipeline.Extract.run(spark, pages.filter(col("url").isin(done: _*)), table,
-      numSalts = 4, numPartitions = 2)
+      numPartitions = 2)
     val failed = rest.take(3).toSeq.map(u => ExtractedDoc(u, "html", null, null, null,
       Array.empty, 0.5, 0L, "boom", Lineage(0, 0, "error")))
     table.commit(failed.toDS().toDF(), Map("input" -> 3L, "extracted" -> 0L, "failed" -> 3L))
@@ -355,12 +369,10 @@ class PlanShapeSpec extends AnyFunSuite {
 
     // the same pass into an empty table, then the resume pass under test
     val empty = new graft.tables.SnapshotTable(Files.createTempDirectory("plan-table").toString)
-    val fresh = stagesOf(graft.pipeline.Extract.run(spark, pages, empty,
-      numSalts = 4, numPartitions = 2))
+    val fresh = stagesOf(graft.pipeline.Extract.run(spark, pages, empty, numPartitions = 2))
     var plans = Seq.empty[SparkPlan]
     val resumed = stagesOf {
-      plans = plansOf(graft.pipeline.Extract.run(spark, pages, table,
-        numSalts = 4, numPartitions = 2))
+      plans = plansOf(graft.pipeline.Extract.run(spark, pages, table, numPartitions = 2))
     }
     // what resume adds to the pass: one job of one stage, with no shuffle,
     // and no SQL plan of the pass scans a chain directory
@@ -376,13 +388,14 @@ class PlanShapeSpec extends AnyFunSuite {
     val all = nodes(write)
     assert(!all.exists(n => n.isInstanceOf[BaseJoinExec] || n.nodeName.contains("Join")),
       s"the resume write plan joins:\n$write")
-    // resume_state runs in the scan stage, below the one (salted) exchange
+    // resume_state runs in the scan stage, below the one exchange,
+    // hashpartitioning(url_key, 2)
     val exchanges = all.collect { case e: ShuffleExchangeExec => e }.distinct
-    assert(exchanges.length === 1 && exchanges.head.outputPartitioning.toString.contains("salt"),
-      s"expected only the salted exchange:\n$write")
+    assert(exchanges.length === 1 && byUrlKey(exchanges.head, 2),
+      s"expected only the hashpartitioning(url_key, 2) exchange:\n$write")
     assert(nodes(exchanges.head.child).exists(_.expressions.exists(
         _.exists(_.isInstanceOf[graft.functions.ResumeState]))),
-      s"resume_state is not below the salted exchange:\n$write")
+      s"resume_state is not below the url_key exchange:\n$write")
   }
 
   test("q_norm_dedup: the executed adaptive plan reuses the fp exchange") {

@@ -41,16 +41,14 @@ class ExtractPipelineSpec extends AnyFunSuite {
     val pages = spark.read.parquet(pagesDir)
 
     // pass 1: everything pending
-    val m1 = Extract.run(spark, pages, table, numSalts = 16, numPartitions = 4,
-      bloomResumeMinRows = bloomMin)
+    val m1 = Extract.run(spark, pages, table, numPartitions = 4, bloomResumeMinRows = bloomMin)
     assert(m1.version === 0)
     assert(m1.input === 500)
     assert(m1.failed === 0, s"unexpected quarantine rows: ${m1.failed}")
     assert(table.read(spark).count() === 500)
 
     // pass 2 on same input: resume anti-join -> nothing to do
-    val m2 = Extract.run(spark, pages, table, numSalts = 16, numPartitions = 4,
-      bloomResumeMinRows = bloomMin)
+    val m2 = Extract.run(spark, pages, table, numPartitions = 4, bloomResumeMinRows = bloomMin)
     assert(m2.input === 0, "resume must be a no-op on unchanged input")
     assert(table.read(spark).count() === 500)
 
@@ -58,7 +56,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
     spark.range(500, 600).mapPartitions(_.map(i => PageGen.page(i, 42L)))
       .write.mode("append").parquet(pagesDir)
     val m3 = Extract.run(spark, spark.read.parquet(pagesDir), table,
-      numSalts = 16, numPartitions = 4, bloomResumeMinRows = bloomMin)
+      numPartitions = 4, bloomResumeMinRows = bloomMin)
     assert(m3.input === 100, s"expected 100 incremental, got ${m3.input}")
     val all = table.read(spark)
     assert(all.count() === 600)
@@ -102,8 +100,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
     assert(pre.getOrElse("error", 0L) === 1)
 
     // run: all 20 minus deadUrl (terminal) are pending; retryUrl re-driven
-    val m1 = Extract.run(spark, pages, table, numSalts = 4, numPartitions = 2,
-      bloomResumeMinRows = bloomMin)
+    val m1 = Extract.run(spark, pages, table, numPartitions = 2, bloomResumeMinRows = bloomMin)
     assert(m1.input === 19, s"expected 19 pending (terminal url excluded), got ${m1.input}")
     val out = table.read(spark)
     val retryRows = out.filter(col("url") === retryUrl && col("error").isNull)
@@ -114,8 +111,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
       "terminal url must not be re-attempted")
 
     // resume is again a no-op (successes + terminal failures both done)
-    val m2 = Extract.run(spark, pages, table, numSalts = 4, numPartitions = 2,
-      bloomResumeMinRows = bloomMin)
+    val m2 = Extract.run(spark, pages, table, numPartitions = 2, bloomResumeMinRows = bloomMin)
     assert(m2.input === 0, "nothing pending after re-drive")
 
     val post = Extract.statusCounts(spark, table).collect()
@@ -152,8 +148,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val fresh = "https://fresh.org/1"
     val pages = Seq(a1, a2, b1, b2, c1, c2, fresh).map(page).toDF("url", "html")
-    val m = Extract.run(spark, pages, table, numSalts = 4, numPartitions = 2,
-      bloomResumeMinRows = bloomMin)
+    val m = Extract.run(spark, pages, table, numPartitions = 2, bloomResumeMinRows = bloomMin)
     assert(m.input === 2, s"only key a (once) and the fresh url are pending: ${m.input}")
     assert(table.manifest(1).get.metrics("deduped") === 1)
     val written = table.read(spark).filter(col("error").isNull && col("url") =!= c2)
@@ -182,8 +177,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
     val body = s"<html><body><p>${"page body words " * 10}</p></body></html>"
     val pages = Seq(okUrl, retryUrl, deadUrl, fresh)
       .map(u => (u, body.getBytes(java.nio.charset.StandardCharsets.UTF_8))).toDF("url", "html")
-    val m = Extract.run(spark, pages, table, numSalts = 4, numPartitions = 2,
-      bloomResumeMinRows = bloomMin)
+    val m = Extract.run(spark, pages, table, numPartitions = 2, bloomResumeMinRows = bloomMin)
     assert(m.input === 2, s"only the retryable and the fresh url are pending: ${m.input}")
     val written = table.read(spark).filter(col("error").isNull && col("url") =!= okUrl)
       .select(col("url"), col("lineage.attempt")).as[(String, Int)].collect().toMap
@@ -206,16 +200,16 @@ class ExtractPipelineSpec extends AnyFunSuite {
     val pages = spark.range(40).mapPartitions(_.map(i => PageGen.page(i, 5L))).toDF()
     val table = new SnapshotTable(tmp("table7"))
     Extract.run(spark, pages.filter(col("url").endsWith("0") || col("url").endsWith("5")),
-      table, numSalts = 4, numPartitions = 2)
+      table, numPartitions = 2)
     val before = indexBlocks
 
     // plan holds the broadcast until release
-    val planned = Extract.plan(spark, pages, Some(table), numSalts = 4, numPartitions = 2)
+    val planned = Extract.plan(spark, pages, Some(table), numPartitions = 2)
     assert(planned.resume.nonEmpty && indexBlocks === before + 1)
     planned.release()
     released(before)
 
-    val m = Extract.run(spark, pages, table, numSalts = 4, numPartitions = 2)
+    val m = Extract.run(spark, pages, table, numPartitions = 2)
     assert(m.input === 32)
     released(before)
 
@@ -223,7 +217,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
     val boom = udf((b: Array[Byte]) => if (b != null) throw new IllegalStateException("boom") else b)
     val failing = spark.range(40, 50).mapPartitions(_.map(i => PageGen.page(i, 5L))).toDF()
       .withColumn("html", boom(col("html")))
-    val e = intercept[Exception](Extract.run(spark, failing, table, numSalts = 4, numPartitions = 2))
+    val e = intercept[Exception](Extract.run(spark, failing, table, numPartitions = 2))
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(t => String.valueOf(t.getMessage).contains("boom")), e)
     released(before)
@@ -243,7 +237,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
     val others = (1 to 5).map(i => s"https://host$i.org/p$i")
     val pages = (variants ++ others).map(page).toDF("url", "html")
 
-    val m1 = Extract.run(spark, pages, table, numSalts = 4, numPartitions = 2)
+    val m1 = Extract.run(spark, pages, table, numPartitions = 2)
     assert(m1.input === 6, s"3 variants must collapse to 1: ${m1.input}")
     val urls = table.read(spark).select("url").as[String].collect().toSet
     assert(urls.count(_.toLowerCase.contains("example.com")) === 1, s"$urls")
@@ -253,7 +247,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
 
     // resume: yet another spelling of the same page is already done
     val respelled = Seq(page("https://EXAMPLE.com/a?y=2&x=1#other")).toDF("url", "html")
-    val m2 = Extract.run(spark, respelled, table, numSalts = 4, numPartitions = 2)
+    val m2 = Extract.run(spark, respelled, table, numPartitions = 2)
     assert(m2.input === 0, "respelled url must resume as done")
   }
 
@@ -264,7 +258,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
     val crawl1 = spark.range(150).mapPartitions(_.map(i => PageGen.page(i, 42L)))
       .toDF().select("url", "html").cache()
     val base = new SnapshotTable(tmp("tbl-base"))
-    Extract.run(spark, crawl1, base, numSalts = 4, numPartitions = 2)
+    Extract.run(spark, crawl1, base, numPartitions = 2)
 
     // crawl 2: %7 pages vanish, %5 pages get brand-new html (url-keyed
     // content so both paths extract identical bytes), 30 new pages appear
@@ -295,7 +289,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
     val toProcess = crawl2.join(
       delta.filter(col("status").isin("added", "changed")).select("url"), "url")
     val staging = new SnapshotTable(tmp("tbl-staging"))
-    val mInc = Extract.run(spark, toProcess, staging, numSalts = 4, numPartitions = 2)
+    val mInc = Extract.run(spark, toProcess, staging, numPartitions = 2)
     assert(mInc.input === 55, s"incremental must process 55, got ${mInc.input}")
 
     val keep = Seq("url", "doc_type", "extracted_text", "n_chars")
@@ -306,7 +300,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
 
     // full path: extract crawl 2 from scratch
     val full = new SnapshotTable(tmp("tbl-full"))
-    Extract.run(spark, crawl2, full, numSalts = 4, numPartitions = 2)
+    Extract.run(spark, crawl2, full, numPartitions = 2)
     val fullOut = full.read(spark).select(keep.head, keep.tail: _*)
 
     def key(df: org.apache.spark.sql.DataFrame) = df.select(col("url"),
@@ -325,7 +319,7 @@ class ExtractPipelineSpec extends AnyFunSuite {
     val tableDir = tmp("table2")
     val table = new SnapshotTable(tableDir)
     val pages1 = spark.range(50).mapPartitions(_.map(i => PageGen.page(i, 7L))).toDF()
-    Extract.run(spark, pages1, table, numSalts = 4, numPartitions = 2)
+    Extract.run(spark, pages1, table, numPartitions = 2)
     assert(table.currentVersion === Some(0))
 
     // simulate a crash between writeData and commitManifest: data written,
@@ -337,5 +331,22 @@ class ExtractPipelineSpec extends AnyFunSuite {
     // reader still sees snapshot 0 only
     assert(table.currentVersion === Some(0))
     assert(table.read(spark).count() === 50)
+  }
+
+  test("the kernel stage partitions on url_key: even rows at P = 4, over 256 tasks at P = 512") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    // rows per kernel partition of `Extract.plan` (no table) over n seeded pages
+    def rowsPerPartition(n: Int, p: Int): Map[Int, Long] = {
+      val pages = spark.range(n).mapPartitions(_.map(i => PageGen.page(i, 3L))).toDF()
+      Extract.plan(spark, pages, numPartitions = p).docs
+        .groupBy(col("lineage.partition_id")).count().as[(Int, Long)].collect().toMap
+    }
+    val even = rowsPerPartition(8000, 4)
+    val maxOverMean = even.values.max * 4.0 / even.values.sum
+    assert(even.size === 4 && maxOverMean <= 1.05,
+      f"rows per partition at P = 4: $even, max/mean $maxOverMean%.3f")
+    val wide = rowsPerPartition(4000, 512)
+    assert(wide.size > 256, s"${wide.size} of 512 kernel partitions hold rows")
   }
 }
