@@ -26,9 +26,10 @@ import graft.tables.{ResumeIndex, SnapshotTable}
  *
  * `run` is `commit` over `plan`, and `plan` is the one definition of the
  * pipeline: `SparkEntry.entry`, `q_extract_pipeline` and `graft.Bench`
- * call it with no table. `Extract.kernel` is the one kernel stage: the
- * streams and the other extraction queries run it directly (a streaming
- * plan cannot sort), so every path extracts the same way.
+ * call it with no table, and the streams run `run` on each micro-batch
+ * (`streaming.StreamingExtract.extractInto`). `kernel` is the one kernel
+ * stage; outside this package only the kernel-only queries and plan pins
+ * reach it, through `kernelPages`.
  *
  * Explicit physical decisions (north_rule): the scan prunes to (url, html)
  * so the fat binary column is the only payload moved, and the repartition
@@ -68,7 +69,7 @@ object Extract {
   /** The kernel stage: the one place a Dataset of pages becomes extracted
     * docs. Each doc's lineage is (task partition, `prior_attempts` + the
     * task's attempt number), so a re-run task records its retry. */
-  def kernel(jobs: Dataset[PageJob]): Dataset[ExtractedDoc] = {
+  private[pipeline] def kernel(jobs: Dataset[PageJob]): Dataset[ExtractedDoc] = {
     val spark = jobs.sparkSession
     import spark.implicits._
     jobs.mapPartitions { it =>
@@ -278,9 +279,10 @@ object Extract {
   }
 
   /** A1-style status rollup over the output table (src/queue.py:80-96),
-    * resolved per url across retries: done / done_empty on any success,
-    * error once terminally failed, pending_retry while attempts remain
-    * (the analog of the reference's `pending` after a failed try). */
+    * resolved per url key by resume's rules: failed attempts count per
+    * spelling, then a key is done / done_empty on any success, error once
+    * any spelling reached maxRetries, and pending_retry otherwise (the
+    * analog of the reference's `pending` after a failed try). */
   def statusCounts(spark: SparkSession, table: SnapshotTable,
                    maxRetries: Int = SnapshotTable.DefaultMaxRetries): DataFrame =
     table.read(spark)
@@ -291,6 +293,9 @@ object Extract {
         max(when(col("error").isNull && col("extracted_text").isNull, 1)
           .otherwise(0)).as("has_empty"),
         sum(when(col("error").isNotNull, 1).otherwise(0)).as("fails"))
+      .groupBy(UrlFunctions.urlKey(col("url")))
+      .agg(max("has_done").as("has_done"), max("has_empty").as("has_empty"),
+        max("fails").as("fails"))
       .withColumn("status",
         when(col("has_done") === 1, "done")
           .when(col("has_empty") === 1, "done_empty")

@@ -13,15 +13,18 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
  * versioned JSON manifests + an atomically-renamed VERSION pointer.
  *
  * Layout:
- *   <dir>/data/snap-<v>/part-*.parquet    (data files of snapshot v)
- *   <dir>/metadata/v<v>.json              (manifest: files, parent, metrics, lineage)
- *   <dir>/metadata/VERSION                (current version number; atomic rename)
+ *   <dir>/data/snap-<v>-<uuid>/part-*.parquet  (data files of snapshot v)
+ *   <dir>/metadata/v<v>.json                   (manifest: files, parent, metrics, lineage)
+ *   <dir>/metadata/VERSION                     (version hint; atomic rename)
  *
- * Commit protocol (write data -> write manifest -> rename pointer)
+ * Commit protocol (write data -> create manifest -> rename pointer)
  * reproduces the reference's pending->indexing->done row state machine
  * (/root/reference/src/queue.py:25-78) with snapshot isolation instead of
- * row mutation: a crash before the pointer rename leaves the previous
- * snapshot intact and the partial data dir unreferenced.
+ * row mutation. Creating `v<v>.json` (parent v - 1) is the commit and is
+ * put-if-absent, so of two writers that planned one version the second
+ * throws, and it never touches the first's files: each snapshot's data dir
+ * is its own. Readers advance past `VERSION` while `v<n+1>.json` exists. A
+ * crash before the manifest leaves the partial data dir unreferenced.
  *
  * Readers see the union of the snapshot chain (each snapshot appends data
  * files). Resume reads the chain's (url, error) columns once, with that
@@ -69,9 +72,13 @@ final class SnapshotTable(dirStr: String) {
                             metrics: Map[String, Long],
                             lineage: Seq[Map[String, Long]])
 
+  /** The newest committed version: the `VERSION` hint, advanced while the
+    * next manifest exists (a commit whose pointer flip has not landed). */
   def currentVersion: Option[Int] = {
     val p = metaDir.resolve("VERSION")
-    if (Files.exists(p)) Some(new String(Files.readAllBytes(p)).trim.toInt) else None
+    var v = if (Files.exists(p)) new String(Files.readAllBytes(p)).trim.toInt else -1
+    while (Files.exists(metaDir.resolve(s"v${v + 1}.json"))) v += 1
+    if (v >= 0) Some(v) else None
   }
 
   def manifest(v: Int): Option[Manifest] = {
@@ -96,13 +103,13 @@ final class SnapshotTable(dirStr: String) {
     case Some(v) =>
       val out = Seq.newBuilder[Manifest]
       var cur = v
-      var guard = 0
-      while (cur >= 0 && guard < 1000000) {
+      while (cur >= 0) {
         manifest(cur) match {
-          case Some(m) => out += m; cur = m.parent
+          case Some(m) =>
+            require(m.parent < cur, s"snapshot table $dir: v$cur.json names parent ${m.parent}")
+            out += m; cur = m.parent
           case None => cur = -1
         }
-        guard += 1
       }
       out.result()
   }
@@ -127,8 +134,6 @@ final class SnapshotTable(dirStr: String) {
     val counts = visibleManifests.map(_.metrics.get("input"))
     if (counts.isEmpty || counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
   }
-
-  def isEmpty: Boolean = visibleDataDirs.isEmpty
 
   /** Read the full table at the current snapshot. */
   def read(spark: SparkSession): DataFrame = {
@@ -215,14 +220,14 @@ final class SnapshotTable(dirStr: String) {
     }
   }
 
-  /** Write the data files for the next snapshot (the action runs here);
-    * manifest is NOT yet visible. Returns (version, snapDir). */
+  /** Write the data files for the next snapshot into a dir of its own (the
+    * action runs here); manifest is NOT yet visible. Returns (version, snapDir). */
   def writeData(df: DataFrame): (Int, String) = {
     Files.createDirectories(metaDir)
     Files.createDirectories(dataDir)
     val v = currentVersion.map(_ + 1).getOrElse(0)
-    val snapDir = dataDir.resolve(s"snap-$v")
-    df.write.mode("overwrite").parquet(snapDir.toString)
+    val snapDir = dataDir.resolve(s"snap-$v-${java.util.UUID.randomUUID()}")
+    df.write.parquet(snapDir.toString)
     (v, snapDir.toString)
   }
 
@@ -233,14 +238,20 @@ final class SnapshotTable(dirStr: String) {
     commitManifest(v, snapDir, metrics, lineage)
   }
 
-  /** Publish a previously written snapshot: manifest + atomic pointer flip. */
+  /** Publish a previously written snapshot: put-if-absent manifest + atomic
+    * pointer flip. Throws when version v - 1 is not the current one or
+    * another writer committed v first; the table is then unchanged. */
   def commitManifest(v: Int, snapDirStr: String, metrics: Map[String, Long],
                      lineage: Seq[Map[String, Long]] = Seq.empty): Int = {
     val snapDir = Paths.get(snapDirStr)
+    val parent = currentVersion.getOrElse(-1)
+    if (parent != v - 1)
+      throw new java.util.ConcurrentModificationException(
+        s"snapshot table $dir: cannot commit v$v over current version $parent")
 
     val root: ObjectNode = mapper.createObjectNode()
     root.put("version", v)
-    root.put("parent", currentVersion.getOrElse(-1))
+    root.put("parent", v - 1)
     val dd: ArrayNode = root.putArray("dataDirs")
     dd.add(snapDir.toString)
     val mn = root.putObject("metrics")
@@ -250,9 +261,13 @@ final class SnapshotTable(dirStr: String) {
       val o = ln.addObject()
       row.foreach { case (k, x) => o.put(k, x) }
     }
-    Files.write(metaDir.resolve(s"v$v.json"), mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(root))
-    // atomic pointer flip: readers see v only after this rename
+    // the commit point: linking the written manifest is a put-if-absent create,
+    // and readers never see it half written
+    val staged = metaDir.resolve(s"v$v.json.${java.util.UUID.randomUUID()}")
+    Files.write(staged, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
+    try Files.createLink(metaDir.resolve(s"v$v.json"), staged)
+    finally Files.delete(staged)
+    // pointer flip: the hint readers start the version probe from
     val tmp = metaDir.resolve(s"VERSION.tmp.$v")
     Files.write(tmp, v.toString.getBytes)
     Files.move(tmp, metaDir.resolve("VERSION"),

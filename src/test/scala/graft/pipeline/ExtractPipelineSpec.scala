@@ -333,6 +333,51 @@ class ExtractPipelineSpec extends AnyFunSuite {
     assert(table.read(spark).count() === 50)
   }
 
+  test("two writers planned at one version: the loser throws, the winner's rows stay") {
+    import spark.implicits._
+    val tableDir = tmp("table8")
+    val (a, b) = (new SnapshotTable(tableDir), new SnapshotTable(tableDir))
+    a.commit(Seq("https://w.org/0").toDF("url"), Map("input" -> 1L))
+    // both plan version 1 before either commits
+    val (va, dirA) = a.writeData(Seq("https://w.org/a1", "https://w.org/a2").toDF("url"))
+    val (vb, dirB) = b.writeData(Seq("https://w.org/b1").toDF("url"))
+    assert(va === 1 && vb === 1)
+    a.commitManifest(va, dirA, Map("input" -> 2L))
+    intercept[java.util.ConcurrentModificationException](b.commitManifest(vb, dirB, Map("input" -> 1L)))
+
+    assert(a.currentVersion === Some(1) && b.currentVersion === Some(1))
+    assert(b.visibleManifests.map(_.version) === Seq(1, 0))
+    assert(b.read(spark).as[String].collect().toSet ===
+      Set("https://w.org/0", "https://w.org/a1", "https://w.org/a2"))
+  }
+
+  test("statusCounts resolves per url key: fails count per spelling, any success is done") {
+    import spark.implicits._
+    import graft.kernel.ExtractKernel.{ExtractedDoc, Lineage}
+    val table = new SnapshotTable(tmp("table9"))
+    def failed(u: String, att: Int) = ExtractedDoc(u, "html", null, null, null,
+      Array.empty, 0.5, 0L, "transient: simulated", Lineage(0, att, "error"))
+    val (a1, a2) = ("http://a.org/p", "HTTP://A.org:80/p")
+    val (b1, b2) = ("http://b.org/p", "http://B.org/p#x")
+    val (c1, c2) = ("http://c.org/p", "http://C.org/p")
+    // a: one spelling failed once, a later pass succeeded under the other;
+    // b: one spelling is terminal; c: two failures per spelling, four per key
+    table.commit(Seq(failed(a1, 0), failed(b1, 0), failed(b1, 1), failed(b1, 2), failed(b2, 0),
+        failed(c1, 0), failed(c1, 1), failed(c2, 0), failed(c2, 1)).toDS().toDF(),
+      Map("input" -> 9L, "extracted" -> 0L, "failed" -> 9L))
+    table.commit(Seq(ExtractedDoc(a2, "html", "ok text", null, null, Array.empty, 0.5, 7L, null,
+      Lineage(0, 0, "t"))).toDS().toDF(), Map("input" -> 1L, "extracted" -> 1L, "failed" -> 0L))
+
+    val statuses = Extract.statusCounts(spark, table).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(statuses === Map("done" -> 1L, "error" -> 1L, "pending_retry" -> 1L), s"$statuses")
+    // resume agrees: only key c is re-driven
+    val body = s"<html><body><p>${"page body words " * 10}</p></body></html>".getBytes("UTF-8")
+    val m = Extract.run(spark, Seq(a1, b2, c1).map(u => (u, body)).toDF("url", "html"), table,
+      numPartitions = 2)
+    assert(m.input === 1L)
+  }
+
   test("the kernel stage partitions on url_key: even rows at P = 4, over 256 tasks at P = 512") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
